@@ -154,7 +154,7 @@ def q_ft_bm25_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     load.service.ts:151-166): BM25 top-k restricted to docs whose
     normalized lang sub-field equals 'en'.  Non-scoring filter context;
     served through the WAND path with candidate-bounded filter
-    resolution (operators/topk.py SearchEngine._filter_allowed)."""
+    resolution (operators/topk.py filter_candidates)."""
     from mongoesindexer_spark.operators.topk import get_engine
     idx = _docs_index(spark, sf_dir)
     pdf = get_engine(spark, idx).topk_wand(

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .topk import SearchEngine, _query_terms
+from .topk import SearchEngine, _check_msm, _query_terms
 
 
 def match_set(eng: SearchEngine, query_text: str, mode: str = "or",
@@ -44,13 +44,11 @@ def match_set(eng: SearchEngine, query_text: str, mode: str = "or",
     (counts double as the conjunction/minimum_should_match filter), and
     the merge-on-read tombstone anti-join."""
     from .build_index import read_flat
+    _check_msm(mode, min_should_match)
     terms = _query_terms(query_text, eng.cfg)
     if not terms:
         return eng.spark.range(0).select(F.col("id").alias("doc_id"))
     flat = read_flat(eng.cat, eng.spark).filter(F.col("term").isin(terms))
-    if min_should_match is not None and mode == "and":
-        raise ValueError("min_should_match applies to mode='or' "
-                         "(mode='and' is already all-clauses)")
     docs = flat.groupBy("doc_id").agg(F.count("*").alias("n_terms"))
     if mode == "and":
         docs = docs.filter(F.col("n_terms") == len(terms))
@@ -734,6 +732,7 @@ def _driver_hit_ids(eng: SearchEngine, terms: list[str], mode: str,
 
     from .topk import SEGMENT_FANOUT_CUTOFF, _block_arrays
     from ..functions.encode import decode_blocks_into
+    _check_msm(mode, min_should_match)
     meta = eng._term_meta(terms)
     live = [t for t in terms if meta.get(t) is not None]
     if not live:

@@ -118,15 +118,11 @@ def boosting_topk(spark: SparkSession, index_dir: str, positive: str,
         keep = ~np.isin(uniq, np.fromiter(eng.tombstones, dtype=np.int64))
         uniq, bm25 = uniq[keep], bm25[keep]
     if uniq.size == 0:
-        return pd.DataFrame(columns=["doc_id", "url", "score"])
+        return eng.hits_frame([])
     neg = _match_docs_kernel(eng, negative)
     score = np.where(np.isin(uniq, neg), bm25 * negative_boost, bm25)
     order = np.lexsort((uniq, -score))[:k]
-    hits = [(float(score[i]), int(uniq[i])) for i in order]
-    urls = eng.fetch_urls([d for _, d in hits])
-    return pd.DataFrame(
-        [{"doc_id": d, "url": urls.get(d), "score": s} for s, d in hits],
-        columns=["doc_id", "url", "score"])
+    return eng.hits_frame([(float(score[i]), int(uniq[i])) for i in order])
 
 
 def _boosting_df(eng: SearchEngine, positive: str, negative: str, k: int,

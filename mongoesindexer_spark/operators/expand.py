@@ -138,7 +138,7 @@ def fuzzy_topk(spark: SparkSession, index_dir: str, term: str, k: int,
     eng = get_engine(spark, index_dir)
     exp = fuzzy_expand(eng, term, fuzziness, prefix_length, max_expansions)
     if not exp:
-        return pd.DataFrame(columns=["doc_id", "url", "score"])
+        return eng.hits_frame([])
     return eng.topk_wand("", k, analyzed_terms=exp,
                          search_after=search_after,
                          filter_field=filter_field,

@@ -102,11 +102,7 @@ def _candidate_values(eng: SearchEngine, uniq: np.ndarray, sub: str,
 def _topk_frame(eng: SearchEngine, uniq: np.ndarray, score: np.ndarray,
                 k: int) -> pd.DataFrame:
     order = np.lexsort((uniq, -score))[:k]
-    hits = [(float(score[i]), int(uniq[i])) for i in order]
-    urls = eng.fetch_urls([d for _, d in hits])
-    return pd.DataFrame(
-        [{"doc_id": d, "url": urls.get(d), "score": s} for s, d in hits],
-        columns=["doc_id", "url", "score"])
+    return eng.hits_frame([(float(score[i]), int(uniq[i])) for i in order])
 
 
 def function_score_topk(spark: SparkSession, index_dir: str,
@@ -130,7 +126,7 @@ def function_score_topk(spark: SparkSession, index_dir: str,
         raise ValueError("locus must be 'kernel' or 'spark'")
     uniq, bm25 = _kernel_candidates(eng, query_text)
     if uniq.size == 0:
-        return pd.DataFrame(columns=["doc_id", "url", "score"])
+        return eng.hits_frame([])
     v = _candidate_values(eng, uniq, sub, missing)
     w = _weight_np(v, factor, modifier)
     score = bm25 * w if boost_mode == "multiply" else bm25 + w
@@ -212,7 +208,7 @@ def decay_score_topk(spark: SparkSession, index_dir: str, query_text: str,
         raise ValueError("locus must be 'kernel' or 'spark'")
     uniq, bm25 = _kernel_candidates(eng, query_text)
     if uniq.size == 0:
-        return pd.DataFrame(columns=["doc_id", "url", "score"])
+        return eng.hits_frame([])
     v = _candidate_values(eng, uniq, sub, missing)
     w = _decay_np(v, fn, origin, scale, offset, decay)
     score = bm25 * w if boost_mode == "multiply" else bm25 + w
@@ -333,7 +329,7 @@ def rank_feature_topk(spark: SparkSession, index_dir: str,
     sub = _check_numeric_sub(eng, field)
     uniq, bm25 = _kernel_candidates(eng, query_text)
     if uniq.size == 0:
-        return pd.DataFrame(columns=["doc_id", "url", "score"])
+        return eng.hits_frame([])
     v = _candidate_values(eng, uniq, sub, float("nan"))
     w = _rank_feature_np(v, function, pivot if pivot is not None
                          else 1.0, scaling_factor, exponent)
@@ -375,7 +371,7 @@ def function_score_compose_topk(spark: SparkSession, index_dir: str,
       ``{"kind": "weight", "weight", "filter"}`` (pure weight function)
     ``filter``: ``(field, value)`` or ``(field, value, normalized)`` —
     any clause shape the engine's filter context accepts, resolved
-    CANDIDATE-BOUNDED per function (the same `_filter_allowed` path
+    CANDIDATE-BOUNDED per function (the same `filter_candidates` path
     every serving filter uses, cost ∝ candidates per function)."""
     if score_mode not in FS_SCORE_MODES:
         raise ValueError(f"score_mode must be one of {FS_SCORE_MODES}")
@@ -386,7 +382,7 @@ def function_score_compose_topk(spark: SparkSession, index_dir: str,
     eng = get_engine(spark, index_dir)
     uniq, bm25 = _kernel_candidates(eng, query_text)
     if uniq.size == 0:
-        return pd.DataFrame(columns=["doc_id", "url", "score"])
+        return eng.hits_frame([])
     vals, weights, masks = [], [], []
     for fn in functions:
         kind = fn.get("kind")
@@ -414,7 +410,7 @@ def function_score_compose_topk(spark: SparkSession, index_dir: str,
             fld, val, *nrm = flt
             sub_f, values = eng._resolve_filter(
                 fld, val, bool(nrm[0]) if nrm else False)
-            allowed = eng._filter_allowed(uniq, sub_f, values)
+            allowed = eng._filter_allowed_list(uniq, [(sub_f, values)])
             mask = np.isin(uniq, allowed)
         else:
             mask = np.ones(uniq.size, dtype=bool)
@@ -471,5 +467,5 @@ def function_score_compose_topk(spark: SparkSession, index_dir: str,
         keep = score >= float(min_score)
         uniq, score = uniq[keep], score[keep]
         if uniq.size == 0:
-            return pd.DataFrame(columns=["doc_id", "url", "score"])
+            return eng.hits_frame([])
     return _topk_frame(eng, uniq, score, k)

@@ -80,7 +80,7 @@ def more_like_this_topk(spark: SparkSession, index_dir: str,
     terms = mlt_select_terms(eng, str(row[0][0]), max_query_terms,
                              min_term_freq, min_doc_freq)
     if not terms:
-        return pd.DataFrame(columns=["doc_id", "url", "score"])
+        return eng.hits_frame([])
     # k+1 covers the (typical) case of the seed ranking in the page —
     # capped at max_result_window so a legal k == cap stays legal (that
     # one edge may return k-1 rows when the seed is in the page)

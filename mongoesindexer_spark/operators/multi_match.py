@@ -428,8 +428,4 @@ def multi_match_topk(spark: SparkSession, index_dirs: dict[str, str],
     else:
         hits = multimatch_exhaustive_arrays(field_blocks, k, mtype,
                                             tie_breaker, tombs)
-    first = next(iter(engines.values()))
-    urls = first.fetch_urls([d for _, d in hits])
-    return pd.DataFrame(
-        [{"doc_id": d, "url": urls.get(d), "score": s} for s, d in hits],
-        columns=["doc_id", "url", "score"])
+    return next(iter(engines.values())).hits_frame(hits)

@@ -133,7 +133,7 @@ def simple_query_string_topk(spark: SparkSession, index_dir: str,
     eng = get_engine(spark, index_dir)
     clauses = parse_simple_query_string(query, default_operator)
     must, should, nots, phrases = _analyzed(eng, clauses)
-    empty = pd.DataFrame(columns=["doc_id", "url", "score"])
+    empty = eng.hits_frame([])
     all_terms = sorted(must | should | nots
                        | {t for _, ts in phrases for t in ts})
     if not all_terms:
@@ -243,11 +243,7 @@ def simple_query_string_topk(spark: SparkSession, index_dir: str,
     agg = np.zeros(uniq.size, dtype=np.float64)
     np.add.at(agg, inv, scores)
     order = np.lexsort((uniq, -agg))[:k]
-    urls = eng.fetch_urls([int(uniq[i]) for i in order])
-    return pd.DataFrame(
-        [{"doc_id": int(uniq[i]), "url": urls.get(int(uniq[i])),
-          "score": float(agg[i])} for i in order],
-        columns=["doc_id", "url", "score"])
+    return eng.hits_frame([(float(agg[i]), int(uniq[i])) for i in order])
 
 
 def match_bool_prefix_topk(spark: SparkSession, index_dir: str,
@@ -277,7 +273,7 @@ def match_bool_prefix_topk(spark: SparkSession, index_dir: str,
         raise ValueError("operator must be 'or' or 'and'")
     eng = get_engine(spark, index_dir)
     toks = analyze_search(query, eng.cfg)
-    empty = pd.DataFrame(columns=["doc_id", "url", "score"])
+    empty = eng.hits_frame([])
     if not toks:
         return empty
     *full, prefix = toks
@@ -342,11 +338,7 @@ def match_bool_prefix_topk(spark: SparkSession, index_dir: str,
     agg = np.zeros(uniq.size, dtype=np.float64)
     np.add.at(agg, inv, scores)
     order = np.lexsort((uniq, -agg))[:k]
-    urls = eng.fetch_urls([int(uniq[i]) for i in order])
-    return pd.DataFrame(
-        [{"doc_id": int(uniq[i]), "url": urls.get(int(uniq[i])),
-          "score": float(agg[i])} for i in order],
-        columns=["doc_id", "url", "score"])
+    return eng.hits_frame([(float(agg[i]), int(uniq[i])) for i in order])
 
 
 def terms_set_topk(spark: SparkSession, index_dir: str,

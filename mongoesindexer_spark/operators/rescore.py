@@ -71,6 +71,7 @@ def rescore_topk(spark: SparkSession, index_dir: str, query_text: str,
     prim = eng.topk_wand(query_text, max(k, window_size))
     if prim.empty:
         return prim
+    urls = dict(zip(prim["doc_id"], prim["url"]))
     tail = prim.iloc[window_size:]
     prim = prim.iloc[:window_size]
     docs = prim["doc_id"].to_numpy(np.int64)
@@ -83,10 +84,7 @@ def rescore_topk(spark: SparkSession, index_dir: str, query_text: str,
     final = _combine(p, s, matched, score_mode,
                      float(query_weight), float(rescore_query_weight))
     order = np.lexsort((docs, -final))
-    urls = prim["url"].to_numpy(object)
-    rows = [{"doc_id": int(docs[i]), "url": urls[i],
-             "score": float(final[i])} for i in order]
-    rows += [{"doc_id": int(d), "url": u, "score": float(s)}
-             for d, u, s in zip(tail["doc_id"], tail["url"],
-                                tail["score"])]
-    return pd.DataFrame(rows[:k], columns=["doc_id", "url", "score"])
+    hits = [(float(final[i]), int(docs[i])) for i in order]
+    hits += [(float(s), int(d)) for d, s in zip(tail["doc_id"],
+                                                tail["score"])]
+    return eng.hits_frame(hits[:k], urls)

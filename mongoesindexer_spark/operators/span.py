@@ -54,7 +54,7 @@ def span_first_topk(spark: SparkSession, index_dir: str, term: str,
             "(index_positions=False) — span queries need position "
             "streams")
     toks = analyze_search(term, eng.cfg)
-    empty = pd.DataFrame(columns=["doc_id", "url", "score"])
+    empty = eng.hits_frame([])
     if len(toks) != 1:
         raise ValueError("span_first wraps a single span_term clause — "
                          f"got {len(toks)} analyzed tokens from "
@@ -108,8 +108,4 @@ def span_first_topk(spark: SparkSession, index_dir: str, term: str,
     scores = idf * tfs * (K1 + 1.0) / (
         tfs + K1 * (1.0 - B + B * dls / eng.avgdl))
     order = np.lexsort((docs, -scores))[:k]
-    urls = eng.fetch_urls([int(docs[i]) for i in order])
-    return pd.DataFrame(
-        [{"doc_id": int(docs[i]), "url": urls.get(int(docs[i])),
-          "score": float(scores[i])} for i in order],
-        columns=["doc_id", "url", "score"])
+    return eng.hits_frame([(float(scores[i]), int(docs[i])) for i in order])

@@ -16,6 +16,7 @@ Determinism: ties broken by doc_id asc everywhere; float64 end-to-end.
 
 from __future__ import annotations
 
+import functools
 import heapq
 import itertools
 import os
@@ -129,16 +130,19 @@ class _RowGroupIndex:
             return schema.empty_table()
         return pa.concat_tables(tabs)
 
-    def _finish(self, tbl, mask, columns) -> pd.DataFrame:
+    def _finish(self, tbl, mask, columns):
         tbl = tbl.filter(mask)
-        if columns is not None:
-            tbl = tbl.select(columns)
-        return tbl.to_pandas()
+        return tbl if columns is None else tbl.select(columns)
 
     def read_isin(self, values: list, columns: list[str] | None = None
                   ) -> pd.DataFrame:
         """Rows whose key is in ``values`` (exact — stats prune row
         groups, an in-memory mask finishes the job)."""
+        return self.read_isin_table(values, columns).to_pandas()
+
+    def read_isin_table(self, values: list,
+                        columns: list[str] | None = None):
+        """:meth:`read_isin` as a ``pyarrow.Table``."""
         import pyarrow as pa
         import pyarrow.compute as pc
         from bisect import bisect_left
@@ -171,7 +175,7 @@ class _RowGroupIndex:
         tbl = self._gather(per_file, columns)
         c = tbl[self.col]
         mask = pc.and_(pc.greater_equal(c, lo), pc.less(c, hi))
-        return self._finish(tbl, mask, columns)
+        return self._finish(tbl, mask, columns).to_pandas()
 
 
 class RangeClause(__import__("typing").NamedTuple):
@@ -216,6 +220,82 @@ class MustNotClause(__import__("typing").NamedTuple):
     banned set is only ever materialized for the query's candidate doc
     range, never the clause's corpus-wide match count."""
     inner: object
+
+
+def _clause_expr(sub: str, value):
+    """One resolved positive clause as a pyarrow predicate on the
+    ``fields`` row's ``sub`` column."""
+    import pyarrow.compute as pc
+    f = pc.field(sub)
+    if isinstance(value, RangeClause):
+        return (f >= value.lo) & (f <= value.hi)
+    if isinstance(value, ExistsClause):
+        return f.is_valid()
+    return f.isin(value)
+
+
+def filter_candidates(cand: np.ndarray, clauses, read_matching,
+                      allowed_docs=None) -> np.ndarray:
+    """The filter-context evaluator every serving locus shares: the
+    doc_ids among ``cand`` (sorted, unique) that are in ``allowed_docs``
+    (when given) and pass every resolved ``(subcol, clause)`` of
+    ``clauses`` — the ES bool conjunction, each clause restricting the
+    previous clause's survivors, so cost shrinks per clause.
+
+    ``read_matching(cand, sub, expr)`` is the locus's row reader: the
+    doc_ids of the ``fields`` rows within ``cand``'s doc range whose
+    ``sub`` satisfies ``expr``.  A :class:`MustNotClause` removes what
+    its inner clause matches, so docs whose sub-field is NULL or absent
+    survive it — exactly ES."""
+    if allowed_docs is not None:
+        cand = cand[np.isin(cand, allowed_docs)]
+    for sub, value in clauses:
+        if cand.size == 0:
+            break
+        negate = isinstance(value, MustNotClause)
+        hit = read_matching(cand, sub,
+                            _clause_expr(sub, value.inner if negate
+                                         else value))
+        cand = np.setdiff1d(cand, hit) if negate \
+            else np.intersect1d(cand, hit)
+    return cand
+
+
+def _fields_span_matching(fields_paths: list[tuple[str, int, int]],
+                          cand: np.ndarray, sub: str, expr) -> np.ndarray:
+    """Fan-out task row reader for :func:`filter_candidates`: one range
+    read over ``[cand.min(), cand.max()]`` that opens only the ``fields``
+    files whose driver-computed doc_id span overlaps it (``(path, lo,
+    hi)``, ``lo`` None = unbounded), with the range and the clause pushed
+    into the parquet scan — cost ∝ the group's doc range, never the
+    clause's corpus-wide match count."""
+    import pyarrow.dataset as pds
+    lo, hi = int(cand[0]), int(cand[-1])
+    sel = [p for p, flo, fhi in fields_paths
+           if flo is None or not (fhi < lo or flo > hi)]
+    if not sel:
+        return np.empty(0, dtype=np.int64)
+    doc = pds.field("doc_id")
+    tbl = pds.dataset(sel, format="parquet").to_table(
+        filter=expr & (doc >= lo) & (doc <= hi), columns=["doc_id"])
+    return tbl["doc_id"].to_numpy()
+
+
+class QueryShape(__import__("typing").NamedTuple):
+    """Everything :func:`topk_kernel` needs to know about a query besides
+    its terms — one value, handed unchanged to the driver kernel and to
+    every fan-out task.  ``phrase_terms`` (the ordered analyzed phrase,
+    repeats kept) selects the phrase kernel with ``slop``; otherwise
+    ``mode``/``min_should`` give the term semantics.  ``search_after``
+    is the deep-paging cursor.  ``use_wand`` forces the WAND (True) or
+    exhaustive (False) term kernel; None chooses by candidate postings
+    (``EXHAUSTIVE_CUTOFF``)."""
+    mode: str = "or"
+    min_should: int | None = None
+    search_after: tuple[float, int] | None = None
+    phrase_terms: list[str] | None = None
+    slop: int = 0
+    use_wand: bool | None = None
 
 
 def _query_terms(query_text: str, cfg: AnalyzerConfig) -> list[str]:
@@ -347,6 +427,18 @@ class SearchEngine:
             [int(d) for d in doc_ids], ["doc_id", "url"])
         return dict(zip(pdf["doc_id"].values, pdf["url"].values))
 
+    def hits_frame(self, hits: list[tuple[float, int]],
+                   urls: dict[int, str] | None = None) -> pd.DataFrame:
+        """The scored serving paths' result: best-first ``[(score,
+        doc_id)]`` → a (doc_id, url, score) frame, urls point-fetched
+        (:meth:`fetch_urls`) unless the caller already holds them.  No
+        hits → the empty frame."""
+        if urls is None:
+            urls = self.fetch_urls([d for _, d in hits])
+        return pd.DataFrame(
+            [{"doc_id": d, "url": urls.get(d), "score": s} for s, d in hits],
+            columns=["doc_id", "url", "score"])
+
     def version(self) -> tuple:
         return self._version
 
@@ -422,8 +514,7 @@ class SearchEngine:
         if mode == "and":
             scored = scored.filter(F.col("n_terms") == len(terms))
         if min_should_match is not None:
-            if mode == "and":
-                raise ValueError("min_should_match applies to mode='or'")
+            _check_msm(mode, min_should_match)
             scored = scored.filter(F.col("n_terms") >= min_should_match)
         if search_after is not None:
             s0, d0 = float(search_after[0]), int(search_after[1])
@@ -653,50 +744,30 @@ class SearchEngine:
                                             else False))
         return out or None
 
-    def _filter_allowed_list(self, cand: "np.ndarray",
-                             clauses) -> "np.ndarray":
-        """Conjunction fold of :meth:`_filter_allowed` — each clause
-        restricts the previous clause's survivors, so cost stays
-        candidate-bounded and shrinks per clause."""
-        for sub, values in clauses:
-            if cand.size == 0:
-                break
-            cand = self._filter_allowed(cand, sub, values)
-        return cand
-
-    def _filter_allowed(self, cand: "np.ndarray", sub: str,
-                        values: list) -> "np.ndarray":
-        """ES filter-context resolution, CANDIDATE-BOUNDED: the sorted
-        doc_ids among ``cand`` whose ``fields.<sub>`` equals one of
-        ``values``.
-
-        The membership check point-reads the doc-ordered ``fields`` table
-        for the candidate ids — cost ∝ |candidates| (itself bounded by
+    def _filter_allowed_list(self, cand: "np.ndarray", clauses,
+                             allowed_docs=None) -> "np.ndarray":
+        """Driver locus of :func:`filter_candidates`: point-reads the
+        candidates' doc-ordered ``fields`` rows through the resident
+        footer directory — cost ∝ |candidates| (itself bounded by
         SEGMENT_FANOUT_CUTOFF on the driver path), NEVER ∝ the filter's
         match count: a broad filter (lang='en' ≈ 60% of a 10^12-doc
         corpus) must not materialize billions of ids driver-side the way
-        reading the value-sorted sidecar would.  ES resolves the same
-        clause per segment from the keyword field's index; our per-range
-        analog is the fan-out task's range-pruned read
-        (:meth:`topk_segments`)."""
-        if cand.size == 0:
-            return cand.astype(np.int64)
-        if isinstance(values, MustNotClause):
-            # must_not = complement within the candidates: docs whose
-            # sub-field is NULL/absent never match the inner clause, so
-            # they survive — exactly ES (see MustNotClause)
-            banned = self._filter_allowed(cand, sub, values.inner)
-            return np.setdiff1d(cand.astype(np.int64), banned)
-        pdf = self._rg_index("fields", "doc_id").read_isin(
-            [int(d) for d in cand], ["doc_id", sub])
-        if isinstance(values, RangeClause):
-            v = pdf[sub]
-            hit = pdf[(v >= values.lo) & (v <= values.hi)]
-        elif isinstance(values, ExistsClause):
-            hit = pdf[pdf[sub].notna()]
-        else:
-            hit = pdf[pdf[sub].isin(values)]
-        return np.unique(hit["doc_id"].values.astype(np.int64))
+        reading the value-sorted sidecar would.  The fan-out tasks run
+        the same evaluator over a range read (:meth:`topk_segments`)."""
+        idx = self._rg_index("fields", "doc_id")
+
+        def read_matching(c, sub, expr):
+            tbl = idx.read_isin_table(c.tolist(), ["doc_id", sub])
+            return tbl.filter(expr)["doc_id"].to_numpy()
+        return filter_candidates(cand, clauses, read_matching, allowed_docs)
+
+    def _restrict(self, clauses, allowed_docs=None):
+        """The driver kernel's ``restrict`` callable, None when neither
+        filter clauses nor a doc whitelist apply."""
+        if not clauses and allowed_docs is None:
+            return None
+        return lambda cand: self._filter_allowed_list(cand, clauses or [],
+                                                      allowed_docs)
 
     def _term_meta(self, terms: list[str]) -> dict:
         """term → (idf, df) | None via a bounded LRU over term_dict point
@@ -718,12 +789,14 @@ class SearchEngine:
                                           pdf["df"].values)}
                 for t in missing:
                     self._td_cache[t] = got.get(t)
-                while len(self._td_cache) > TD_CACHE_TERMS:
-                    self._td_cache.popitem(last=False)
             out = {}
             for t in terms:
                 self._td_cache.move_to_end(t)
                 out[t] = self._td_cache[t]
+            # evict only after the answer is built: this query's own
+            # least-recently-used entries must not be dropped from it
+            while len(self._td_cache) > TD_CACHE_TERMS:
+                self._td_cache.popitem(last=False)
             return out
 
     def _term_blocks(self, terms: list[str]) -> dict[str, list[dict]]:
@@ -744,8 +817,6 @@ class SearchEngine:
                     bl = fetched.get(t, [])
                     if sum(b["n"] for b in bl) <= BLOCK_CACHE_MAX_POSTINGS:
                         self._block_cache[t] = bl
-                while len(self._block_cache) > BLOCK_CACHE_TERMS:
-                    self._block_cache.popitem(last=False)
             out = {}
             for t in terms:
                 bl = self._block_cache.get(t)
@@ -755,6 +826,9 @@ class SearchEngine:
                     bl = fetched.get(t, [])
                 if bl:
                     out[t] = bl
+            # evict only after the answer is built (see _term_meta)
+            while len(self._block_cache) > BLOCK_CACHE_TERMS:
+                self._block_cache.popitem(last=False)
             return out
 
     def topk_wand(self, query_text: str, k: int,
@@ -805,8 +879,8 @@ class SearchEngine:
         load.service.ts:151-166) — restrict the scored result to docs
         whose keyword sub-field equals ``filter_value`` (or ANY of a
         list, ES ``terms``).  Non-scoring, like ES filter context.  The
-        filter resolves candidate-bounded (:meth:`_filter_allowed`) on
-        the driver path and range-pruned per task on the fan-out path —
+        filter resolves through :func:`filter_candidates` on both loci —
+        candidate-bounded on the driver, range-pruned per fan-out task —
         never ∝ the filter's corpus-wide match count.
 
         ``analyzed_terms``: bypass the search analyzer and score these
@@ -819,13 +893,11 @@ class SearchEngine:
         doc must match ≥ this many of the analyzed term clauses
         (mode="or" only; "and" IS min_should_match=len(terms))."""
         _check_k(k)
-        if min_should_match is not None and mode == "and":
-            raise ValueError("min_should_match applies to mode='or' "
-                             "(mode='and' is already all-clauses)")
+        _check_msm(mode, min_should_match)
         analyzed = sorted(set(analyzed_terms)) if analyzed_terms is not None \
             else _query_terms(query_text, self.cfg)
         if not analyzed:
-            return pd.DataFrame(columns=["doc_id", "url", "score"])
+            return self.hits_frame([])
         meta = self._term_meta(analyzed)
         td = {t: m[0] for t, m in meta.items() if m is not None}
         # drop terms with no term_dict row NOW: a fully-tombstoned term
@@ -837,63 +909,19 @@ class SearchEngine:
         # contain every term (same as topk_df, whose n_terms count can
         # never reach len(analyzed))
         if not terms or (mode == "and" and len(terms) < len(analyzed)):
-            return pd.DataFrame(columns=["doc_id", "url", "score"])
+            return self.hits_frame([])
         flt = self._resolve_filter_list(filter_field, filter_value,
                                         filter_normalized, filters)
+        shape = QueryShape(mode, min_should_match, search_after,
+                           use_wand=use_wand)
         if use_segments is None:
             total_df = sum(m[1] for m in meta.values() if m is not None)
             use_segments = total_df >= SEGMENT_FANOUT_CUTOFF
         if use_segments:
-            return self.topk_segments(terms, td, k, mode=mode,
-                                      search_after=search_after,
-                                      filter_clause=flt,
-                                      min_should=min_should_match)
-        by_term = self._term_blocks(terms)
-        if mode == "and" and len(by_term) < len(terms):
-            return pd.DataFrame(columns=["doc_id", "url", "score"])
-        if use_wand is None:
-            n_cand = sum(b["n"] for bl in by_term.values() for b in bl)
-            use_wand = n_cand >= EXHAUSTIVE_CUTOFF
-        # batch-decode every not-yet-decoded block in three vectorized
-        # passes (cached blocks keep their arrays across queries)
-        decode_blocks_into([b for bl in by_term.values() for b in bl
-                            if "_arrs" not in b])
-        allowed_arr = allowed_set = None
-        if flt is not None:
-            cand = [_block_arrays(b)[0] for bl in by_term.values() for b in bl]
-            allowed_arr = self._filter_allowed_list(
-                np.unique(np.concatenate(cand)) if cand
-                else np.empty(0, np.int64), flt)
-            if allowed_arr.size == 0:
-                return pd.DataFrame(columns=["doc_id", "url", "score"])
-            allowed_set = frozenset(allowed_arr.tolist())
-        if use_wand:
-            cursors = [_TermCursor(td[t], by_term[t], self.avgdl)
-                       for t in terms if t in by_term]
-            if not cursors:
-                hits = []
-            elif mode == "and":
-                hits = conjunctive_topk_arrays(cursors, self.avgdl, k,
-                                               self.tombstones,
-                                               after=search_after,
-                                               allowed=allowed_set)
-            else:
-                hits = wand_topk_arrays(cursors, self.avgdl, k,
-                                        self.tombstones,
-                                        after=search_after,
-                                        allowed=allowed_set,
-                                        min_should=min_should_match)
-        else:
-            hits = exhaustive_topk_arrays(
-                {t: (td[t], by_term[t]) for t in terms if t in by_term},
-                self.avgdl, k, self.tombstones,
-                require_all=(mode == "and"), after=search_after,
-                allowed=allowed_arr, min_should=min_should_match)
-        urls = self.fetch_urls([d for _, d in hits])
-        return pd.DataFrame(
-            [{"doc_id": d, "url": urls.get(d), "score": s} for s, d in hits],
-            columns=["doc_id", "url", "score"],
-        )
+            return self.topk_segments(terms, td, k, shape, filter_clause=flt)
+        return self.hits_frame(topk_kernel(
+            self._term_blocks(terms), td, self.avgdl, k, self.tombstones,
+            shape, self._restrict(flt)))
 
     def phrase_topk(self, phrase_text: str, k: int,
                     use_segments: bool | None = None,
@@ -938,7 +966,6 @@ class SearchEngine:
         so the term's encoded blocks never reach the driver.
         """
         _check_k(k)
-        empty = pd.DataFrame(columns=["doc_id", "url", "score"])
         if not self.has_positions:
             raise ValueError(
                 f"index at {self.index_dir!r} was built without positions "
@@ -947,43 +974,25 @@ class SearchEngine:
         # ORDERED, duplicates kept: "to be or not to be" is six terms
         terms = analyze_search(phrase_text, self.cfg)
         if not terms:
-            return empty
+            return self.hits_frame([])
         uniq = list(dict.fromkeys(terms))
         meta = self._term_meta(uniq)
         if any(meta[t] is None for t in uniq):
-            return empty    # a term absent from the corpus ⇒ no phrase match
+            return self.hits_frame([])   # a term absent ⇒ no phrase match
         idf = {t: m[0] for t, m in meta.items()}
         flt = self._resolve_filter_list(filter_field, filter_value,
                                         filter_normalized, filters)
+        shape = QueryShape(search_after=search_after, phrase_terms=terms,
+                           slop=slop)
         if use_segments is None:
             total_df = sum(m[1] for m in meta.values())
             use_segments = total_df >= SEGMENT_FANOUT_CUTOFF
         if use_segments:
-            return self.topk_segments(uniq, idf, k, search_after=search_after,
-                                      filter_clause=flt, phrase_terms=terms,
-                                      phrase_slop=slop,
+            return self.topk_segments(uniq, idf, k, shape, filter_clause=flt,
                                       allowed_docs=allowed_docs)
-        by_term = self._term_blocks(uniq)
-        if len(by_term) < len(uniq):
-            return empty
-        allowed_fn = None
-        if flt is not None:
-            allowed_fn = lambda cand: self._filter_allowed_list(cand, flt)  # noqa: E731
-        if allowed_docs is not None:
-            adocs = np.asarray(allowed_docs, dtype=np.int64)
-            base_fn = allowed_fn
-
-            def allowed_fn(cand, _base=base_fn, _adocs=adocs):
-                sub = cand if _base is None else _base(cand)
-                return sub[np.isin(sub, _adocs)]
-        hits = phrase_topk_arrays(terms, idf, by_term, self.avgdl, k,
-                                  self.tombstones, after=search_after,
-                                  allowed_fn=allowed_fn, slop=slop)
-        urls = self.fetch_urls([d for _, d in hits])
-        return pd.DataFrame(
-            [{"doc_id": d, "url": urls.get(d), "score": s} for s, d in hits],
-            columns=["doc_id", "url", "score"],
-        )
+        return self.hits_frame(topk_kernel(
+            self._term_blocks(uniq), idf, self.avgdl, k, self.tombstones,
+            shape, self._restrict(flt, allowed_docs)))
 
     def phrase_prefix_topk(self, phrase_text: str, k: int,
                            max_expansions: int = 50) -> pd.DataFrame:
@@ -1009,7 +1018,7 @@ class SearchEngine:
         union decode, because the union must be assembled before the
         kernel prunes)."""
         _check_k(k)
-        empty = pd.DataFrame(columns=["doc_id", "url", "score"])
+        empty = self.hits_frame([])
         if not self.has_positions:
             raise ValueError(
                 f"index at {self.index_dir!r} was built without positions "
@@ -1039,13 +1048,9 @@ class SearchEngine:
         kernel_terms = {t: by_term[t] for t in ufixed}
         kernel_terms[pseudo] = [_union_positions_block(exp_blocks)]
         idf[pseudo] = float(exps["idf"].sum())
-        hits = phrase_topk_arrays(fixed + [pseudo], idf, kernel_terms,
-                                  self.avgdl, k, self.tombstones)
-        urls = self.fetch_urls([d for _, d in hits])
-        return pd.DataFrame(
-            [{"doc_id": d, "url": urls.get(d), "score": s}
-             for s, d in hits],
-            columns=["doc_id", "url", "score"])
+        return self.hits_frame(topk_kernel(
+            kernel_terms, idf, self.avgdl, k, self.tombstones,
+            QueryShape(phrase_terms=fixed + [pseudo])))
 
     def explain(self, query_text: str, doc_id: int) -> pd.DataFrame:
         """ES ``_explain``: the per-term BM25 score breakdown for ONE doc
@@ -1136,73 +1141,48 @@ class SearchEngine:
         return pack_segment_groups(files, max(1, int(max_groups)))
 
     def topk_segments(self, terms: list[str], idf_by_term: dict[str, float],
-                      k: int, mode: str = "or",
-                      search_after: tuple[float, int] | None = None,
-                      filter_clause: "tuple | list | None" = None,
-                      phrase_terms: list[str] | None = None,
-                      min_should: int | None = None,
-                      phrase_slop: int = 0,
-                      allowed_docs=None
-                      ) -> pd.DataFrame:
-        """ES-shard-style fan-out: per doc-disjoint segment group, score
-        top-k locally (same cost-based exhaustive/WAND kernel) inside a
-        Spark task; merge the ≤ groups×k (score, doc_id) rows driver-side.
+                      k: int, shape: QueryShape = QueryShape(),
+                      filter_clause: "list | None" = None,
+                      allowed_docs=None) -> pd.DataFrame:
+        """ES-shard-style fan-out: per doc-disjoint segment group, a Spark
+        task reads the group's blocks for ``terms`` and runs the same
+        :func:`topk_kernel` the driver runs, with the same ``shape``
+        (term or phrase semantics, ``search_after``, ``use_wand``); the
+        driver merges the ≤ groups×k (score, doc_id) rows.
 
-        Rank-identical to the driver path: every doc's postings for all
-        query terms live in exactly one group (doc-range-disjoint
-        segments), so the global top-k is the top-k of the per-group
-        top-ks — the reference's ES executes WAND per shard and merges
-        the same way (4-shard analog, configs/ltd_doc.settings.json:244).
-        Driver traffic is ≤ k rows per group, never the candidate blocks.
+        Rank-identical to the driver path: every doc's postings (and
+        positions) for all query terms live in exactly one group
+        (doc-range-disjoint segments), so per-group conjunctions, phrase
+        matches and matched-term counts are complete, and the global
+        top-k is the top-k of the per-group top-ks — the reference's ES
+        executes WAND per shard and merges the same way (4-shard analog,
+        configs/ltd_doc.settings.json:244).  Driver traffic is ≤ k rows
+        per group, never the candidate blocks.
 
-        ``mode="and"``: conjunctive per group — valid because a doc's
-        postings for ALL terms live in exactly one doc-disjoint group, so
-        per-group intersections partition the global intersection.
-
-        ``filter_clause``: one resolved ``(subcol, values)`` from
-        :meth:`_resolve_filter`, or a LIST of them (the ES bool
-        conjunction of several filter/must_not clauses) — each task
-        reads the ``fields`` rows for ITS candidate doc range (doc_id
-        range + value predicates pushed to parquet), so per-task filter
+        ``filter_clause`` (the resolved ``[(subcol, clause), ...]`` of
+        :meth:`_resolve_filter_list`) and ``allowed_docs`` (an explicit
+        doc_id whitelist — the rescore-window contract, ≤
+        max_result_window ids, broadcast once) reach the kernel as its
+        ``restrict``: the same :func:`filter_candidates` evaluator the
+        driver uses, reading per task only the ``fields`` rows in its
+        candidates' doc range (:func:`_fields_span_matching`), so filter
         cost ∝ the group's range, never the filter's corpus-wide match
-        count; the driver still receives only ≤ k rows per group.
-        Group allowed-sets partition the global filter set exactly as
+        count.  Group slices partition the global allowed set exactly as
         the postings do, preserving rank identity.
-
-        ``phrase_terms``: run the phrase kernel per group instead of the
-        WAND/conjunctive kernels (``terms`` is then the deduplicated term
-        set, ``phrase_terms`` the ordered sequence with repeats) — valid
-        for the same reason ``mode="and"`` is: a doc's postings (and
-        positions) for every phrase term live in exactly one doc-disjoint
-        group, so per-group phrase matches partition the global match set.
-
-        ``min_should``: minimum_should_match per group — valid for the
-        same doc-disjointness reason: a doc's matched-term count is
-        complete within its one group.
-
-        ``allowed_docs``: explicit doc_id whitelist (the rescore-window
-        contract) — broadcast once, each task intersects its own
-        doc-range slice; group slices partition the global set exactly
-        as the postings do, preserving rank identity.  Bounded by the
-        caller's window (≤ max_result_window), so the broadcast is k-
-        sized, never corpus-sized.
         """
         _check_k(k)
         # only terms with a dictionary row are scorable (a fully-
         # tombstoned term keeps blocks until compaction but has no idf)
-        terms = [t for t in terms if t in idf_by_term]
-        groups = self._segment_groups() if terms else []
-        if not groups:
-            return pd.DataFrame(columns=["doc_id", "url", "score"])
-        avgdl = self.avgdl
-        if filter_clause is None:
-            filter_clauses: list[tuple[str, object]] = []
-        elif isinstance(filter_clause, tuple):
-            filter_clauses = [filter_clause]
-        else:
-            filter_clauses = list(filter_clause)
+        idf = {t: idf_by_term[t] for t in terms if t in idf_by_term}
+        groups = self._segment_groups() if idf else []
+        ad = None
+        if allowed_docs is not None:
+            ad = np.unique(np.asarray(allowed_docs, dtype=np.int64))
+        if not groups or (ad is not None and ad.size == 0):
+            return self.hits_frame([])
+        clauses = list(filter_clause or [])
         fields_paths: list[tuple[str, int, int]] = []
-        if filter_clauses:
+        if clauses:
             # per-file doc_id spans from the resident footer directory, so
             # each fan-out task opens ONLY the fields files overlapping
             # its doc range — at 10^12 docs the fields table is millions
@@ -1219,143 +1199,35 @@ class SearchEngine:
                     cur[1] = max(cur[1], hi)
             fields_paths = [(fidx.paths[fi], *span)
                             for fi, span in spans.items()]
-        ts_bc = self.spark.sparkContext.broadcast(self.tombstones)
-        ad_sorted = None
-        if allowed_docs is not None:
-            ad_sorted = np.unique(np.asarray(allowed_docs, dtype=np.int64))
-            if ad_sorted.size == 0:
-                return pd.DataFrame(columns=["doc_id", "url", "score"])
-        ad_bc = self.spark.sparkContext.broadcast(ad_sorted)
+        avgdl = self.avgdl
         payload = [("\n".join(g),) for g in groups]
         fdf = self.spark.createDataFrame(
             self.spark.sparkContext.parallelize(payload, len(payload)),
             "paths string")
+        # per-query broadcasts: released below, or a serving process
+        # leaks one per fanned-out query
+        sc = self.spark.sparkContext
+        ts_bc = sc.broadcast(self.tombstones)
+        ad_bc = None if ad is None else sc.broadcast(ad)
 
         def _seg_topk(it):
             import pyarrow.dataset as _pds
+            ad_v = None if ad_bc is None else ad_bc.value
+            restrict = None
+            if clauses or ad_v is not None:
+                read = functools.partial(_fields_span_matching, fields_paths)
+                restrict = lambda cand: filter_candidates(  # noqa: E731
+                    cand, clauses, read, ad_v)
             for pdf in it:
                 for paths_str in pdf["paths"].values:
                     ds = _pds.dataset(paths_str.split("\n"), format="parquet")
                     bl = ds.to_table(
-                        filter=_pds.field("term").isin(terms)).to_pandas()
-                    if not len(bl):
-                        continue
+                        filter=_pds.field("term").isin(list(idf))).to_pandas()
                     by_term: dict[str, list[dict]] = {}
-                    recs = bl.to_dict("records")
-                    for r in recs:
+                    for r in bl.to_dict("records"):
                         by_term.setdefault(r["term"], []).append(r)
-                    if (mode == "and" or phrase_terms is not None) \
-                            and len(by_term) < len(terms):
-                        continue        # some term absent ⇒ empty group
-                    decode_blocks_into(recs)
-                    allowed = None
-                    if filter_clauses:
-                        # this group's candidate doc range: fields rows
-                        # outside it cannot matter, so each clause's read
-                        # opens only the span-overlapping files (driver-
-                        # computed footer spans) and pushes range + value
-                        # predicates; clauses intersect (ES bool AND)
-                        lo = min(int(r["first_doc"]) for r in recs)
-                        hi = max(int(r["last_doc"]) for r in recs)
-                        sel = [p for p, flo, fhi in fields_paths
-                               if flo is None or not (fhi < lo or flo > hi)]
-                        cand_arr = None   # lazy: only must_not needs it
-                        dead = False
-                        for fsub, fvalues in filter_clauses:
-                            negate = isinstance(fvalues, MustNotClause)
-                            fvals = fvalues.inner if negate else fvalues
-                            if not sel and not negate:
-                                dead = True   # no fields rows in range
-                                break
-                            if isinstance(fvals, RangeClause):
-                                vpred = ((_pds.field(fsub) >= fvals.lo)
-                                         & (_pds.field(fsub)
-                                            <= fvals.hi))
-                            elif isinstance(fvals, ExistsClause):
-                                vpred = _pds.field(fsub).is_valid()
-                            else:
-                                vpred = _pds.field(fsub).isin(fvals)
-                            fexpr = (vpred
-                                     & (_pds.field("doc_id") >= lo)
-                                     & (_pds.field("doc_id") <= hi))
-                            match = np.empty(0, dtype=np.int64)
-                            if sel:
-                                ft = _pds.dataset(sel, format="parquet") \
-                                    .to_table(filter=fexpr,
-                                              columns=["doc_id"])
-                                match = ft["doc_id"].to_numpy(
-                                    zero_copy_only=False).astype(np.int64)
-                            if negate:
-                                # must_not: complement of the in-range
-                                # matching set within THIS group's
-                                # candidate postings (arrays already
-                                # decoded in-task — vectorized, range-
-                                # bounded, never corpus-bounded)
-                                if cand_arr is None:
-                                    cand_arr = np.unique(np.concatenate(
-                                        [_block_arrays(r)[0]
-                                         for r in recs]))
-                                keep = cand_arr[~np.isin(cand_arr, match)]
-                                this = frozenset(keep.tolist())
-                            else:
-                                this = frozenset(match.tolist())
-                            allowed = this if allowed is None \
-                                else allowed & this
-                            if not allowed:
-                                dead = True
-                                break
-                        if dead:
-                            continue
-                    ad = ad_bc.value
-                    if ad is not None:
-                        # this group's slice of the whitelist — doc-
-                        # disjoint groups partition the global set
-                        glo = min(int(r["first_doc"]) for r in recs)
-                        ghi = max(int(r["last_doc"]) for r in recs)
-                        ga = ad[(ad >= glo) & (ad <= ghi)]
-                        if ga.size == 0:
-                            continue    # no whitelisted doc in this range
-                        allowed = (frozenset(ga.tolist()) if allowed is None
-                                   else allowed & frozenset(ga.tolist()))
-                        if not allowed:
-                            continue
-                    if phrase_terms is not None:
-                        allowed_fn = None
-                        if allowed is not None:
-                            aarr = np.fromiter(allowed, dtype=np.int64)
-                            aarr.sort()
-                            allowed_fn = (lambda a: lambda c:
-                                          c[np.isin(c, a,
-                                                    assume_unique=True)])(aarr)
-                        hits = phrase_topk_arrays(
-                            phrase_terms, idf_by_term, by_term, avgdl, k,
-                            ts_bc.value, after=search_after,
-                            allowed_fn=allowed_fn, slop=phrase_slop)
-                    elif int(bl["n"].sum()) >= EXHAUSTIVE_CUTOFF:
-                        cursors = [_TermCursor(idf_by_term[t], by_term[t], avgdl)
-                                   for t in terms if t in by_term]
-                        if not cursors:
-                            hits = []
-                        elif mode == "and":
-                            hits = conjunctive_topk_arrays(
-                                cursors, avgdl, k, ts_bc.value,
-                                after=search_after, allowed=allowed)
-                        else:
-                            hits = wand_topk_arrays(cursors, avgdl, k,
-                                                    ts_bc.value,
-                                                    after=search_after,
-                                                    allowed=allowed,
-                                                    min_should=min_should)
-                    else:
-                        hits = exhaustive_topk_arrays(
-                            {t: (idf_by_term[t], by_term[t])
-                             for t in terms if t in by_term},
-                            avgdl, k, ts_bc.value,
-                            require_all=(mode == "and"),
-                            after=search_after,
-                            allowed=None if allowed is None else
-                            np.fromiter(allowed, dtype=np.int64),
-                            min_should=min_should)
+                    hits = topk_kernel(by_term, idf, avgdl, k, ts_bc.value,
+                                       shape, restrict)
                     if hits:
                         yield pd.DataFrame(
                             {"score": [s for s, _ in hits],
@@ -1365,17 +1237,12 @@ class SearchEngine:
             rows = fdf.mapInPandas(
                 _seg_topk, schema="score double, doc_id long").collect()
         finally:
-            # per-query broadcast: release driver+executor copies now, or
-            # a serving process leaks one per fanned-out query
             ts_bc.unpersist()
+            if ad_bc is not None:
+                ad_bc.unpersist()
         merged = sorted(((r["score"], r["doc_id"]) for r in rows),
                         key=lambda t: (-t[0], t[1]))[:k]
-        urls = self.fetch_urls([d for _, d in merged])
-        return pd.DataFrame(
-            [{"doc_id": d, "url": urls.get(d), "score": s}
-             for s, d in merged],
-            columns=["doc_id", "url", "score"],
-        )
+        return self.hits_frame(merged)
 
 
 # Module-level cache: (index_dir) → SearchEngine, invalidated when any
@@ -1577,6 +1444,73 @@ def _check_k(k: int) -> None:
             f"k={k} exceeds max_result_window={MAX_RESULT_WINDOW} (the ES "
             "serving cap, reference configs/ltd_doc.settings.json:246); "
             "page with successive bounded queries instead")
+
+
+def _check_msm(mode: str, min_should_match: int | None) -> None:
+    if min_should_match is not None and mode == "and":
+        raise ValueError("min_should_match applies to mode='or' "
+                         "(mode='and' is already all-clauses)")
+
+
+def topk_kernel(by_term: dict[str, list[dict]], idf: dict[str, float],
+                avgdl: float, k: int, tombstones, shape: QueryShape,
+                restrict=None) -> list[tuple[float, int]]:
+    """The one scoring-kernel dispatch → ``[(score, doc_id)]``
+    best-first, run unchanged on the driver (``SearchEngine.topk_wand``,
+    ``phrase_topk``, ``phrase_prefix_topk``) and inside every fan-out
+    task (:meth:`SearchEngine.topk_segments`).
+
+    ``by_term``: the posting-block rows of the query terms that have
+    any on this locus (the driver, or one segment group).  ``idf``: the
+    scorable query terms in scoring order — per-doc contributions
+    accumulate in this order, the last-bit float contract every
+    rank-identity test relies on.  ``restrict``: maps the sorted
+    candidate doc_id array to its allowed subset (filter context, an
+    explicit doc whitelist), or None.
+
+    Conjunctive and phrase queries with a term missing from ``by_term``
+    match nothing.  A phrase runs the phrase kernel; term queries run
+    WAND when ``shape.use_wand`` says so or, when it is None, when the
+    candidate postings reach EXHAUSTIVE_CUTOFF — the exhaustive scorer
+    otherwise (both rank-identical, property-tested)."""
+    if (shape.mode == "and" or shape.phrase_terms is not None) \
+            and any(t not in by_term for t in idf):
+        return []
+    if shape.phrase_terms is not None:
+        return phrase_topk_arrays(shape.phrase_terms, idf, by_term, avgdl,
+                                  k, tombstones, after=shape.search_after,
+                                  allowed_fn=restrict, slop=shape.slop)
+    terms = [t for t in idf if t in by_term]
+    if not terms:
+        return []
+    # batch-decode every not-yet-decoded block in three vectorized
+    # passes (cached blocks keep their arrays across queries)
+    decode_blocks_into([b for t in terms for b in by_term[t]
+                        if "_arrs" not in b])
+    allowed = None
+    if restrict is not None:
+        allowed = restrict(np.unique(np.concatenate(
+            [_block_arrays(b)[0] for t in terms for b in by_term[t]])))
+        if allowed.size == 0:
+            return []
+    use_wand = shape.use_wand
+    if use_wand is None:
+        use_wand = sum(b["n"] for t in terms
+                       for b in by_term[t]) >= EXHAUSTIVE_CUTOFF
+    if not use_wand:
+        return exhaustive_topk_arrays(
+            {t: (idf[t], by_term[t]) for t in terms}, avgdl, k, tombstones,
+            require_all=(shape.mode == "and"), after=shape.search_after,
+            allowed=allowed, min_should=shape.min_should)
+    cursors = [_TermCursor(idf[t], by_term[t], avgdl) for t in terms]
+    allowed_set = None if allowed is None else frozenset(allowed.tolist())
+    if shape.mode == "and":
+        return conjunctive_topk_arrays(cursors, avgdl, k, tombstones,
+                                       after=shape.search_after,
+                                       allowed=allowed_set)
+    return wand_topk_arrays(cursors, avgdl, k, tombstones,
+                            after=shape.search_after, allowed=allowed_set,
+                            min_should=shape.min_should)
 
 
 def pack_segment_groups(files: list[tuple[str, int]], max_groups: int
@@ -1850,7 +1784,7 @@ def phrase_topk_arrays(phrase_terms: list[str],
 
     ``allowed_fn``: ES filter context — maps the sorted candidate doc
     array to its allowed subset (candidate-bounded resolution, see
-    :meth:`SearchEngine._filter_allowed`).  ``after``: search_after
+    :func:`filter_candidates`).  ``after``: search_after
     cursor, as in the other kernels.
     """
     uniq = list(dict.fromkeys(phrase_terms))

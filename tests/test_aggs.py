@@ -357,6 +357,33 @@ def test_significant_terms_loci_agree(spark, agg_index, oracle_tiny,
     assert np.allclose(fast["score"], dist["score"])
 
 
+def test_significant_terms_msm_same_on_both_loci(spark, agg_index,
+                                                 monkeypatch):
+    """minimum_should_match is validated, and applied, the same way on
+    the driver hit-id path and the distributed match_set path."""
+    import mongoesindexer_spark.operators.topk as topk_mod
+    from mongoesindexer_spark.operators.aggs import \
+        search_significant_terms_agg
+    from mongoesindexer_spark.operators.topk import get_engine
+    eng = get_engine(spark, agg_index)
+    q = "udrndau atreq kni"
+    out, errs = [], []
+    for cutoff in (topk_mod.SEGMENT_FANOUT_CUTOFF, 1):
+        monkeypatch.setattr(topk_mod, "SEGMENT_FANOUT_CUTOFF", cutoff)
+        out.append(search_significant_terms_agg(
+            eng, q, size=8, min_should_match=2).toPandas())
+        with pytest.raises(ValueError) as e:
+            search_significant_terms_agg(eng, q, mode="and",
+                                         min_should_match=2)
+        errs.append(str(e.value))
+    fast, dist = out
+    assert len(fast) > 0
+    assert list(fast["term"]) == list(dist["term"])
+    assert list(fast["fg_df"]) == list(dist["fg_df"])
+    assert np.allclose(fast["score"], dist["score"])
+    assert errs[0] == errs[1]
+
+
 def test_filters_agg_single_scan_plan(spark, agg_index):
     """The filters agg reads postings ONCE regardless of bucket count
     (union-term pushed scan + conditional per-bucket counts) — N named

@@ -35,11 +35,11 @@ def _paths(eng, q, k, **kw):
     return w, e, s, d
 
 
-def _check(eng, q, k, keep_ids, **kw):
+def _check(eng, q, k, keep_ids, paths=_paths, **kw):
     base = eng.topk_wand(q, 100)
     want = base[base["doc_id"].isin(keep_ids)].head(k)
     assert len(want) > 0
-    for got in _paths(eng, q, k, **kw):
+    for got in paths(eng, q, k, **kw):
         assert [int(x) for x in got["doc_id"]] \
             == [int(x) for x in want["doc_id"]]
         assert [round(float(x), 9) for x in got["score"]] \
@@ -116,3 +116,74 @@ def test_normalized_flag_per_clause(spark, bf_index):
     # 3-tuple clause: (field, value, normalized) folds the query value
     _check(eng, "common extra", 10, keep,
            filters=[("lang", "EN", True)])
+
+
+def _every_locus(eng, q, k, **kw):
+    """Driver exhaustive, driver WAND, fan-out exhaustive, fan-out WAND
+    and the Spark DataFrame path."""
+    out = [eng.topk_wand(q, k, use_segments=seg, use_wand=wand, **kw)
+           for seg in (False, True) for wand in (False, True)]
+    return out + [eng.topk_df(q, k, **kw).toPandas()]
+
+
+@pytest.mark.parametrize("query", [{"mode": "or"}, {"mode": "and"},
+                                   {"min_should_match": 2}])
+@pytest.mark.parametrize("clause", ["term", "terms", "range", "exists",
+                                    "must_not"])
+def test_every_locus_agrees_per_clause_and_mode(spark, bf_index, clause,
+                                                query):
+    from mongoesindexer_spark.operators.topk import ExistsClause, \
+        MustNotClause, RangeClause, get_engine
+    d, rows = bf_index
+    eng = get_engine(spark, d)
+    field, value, match = {
+        "term": ("lang", "en", lambda r: r[3] == "en"),
+        "terms": ("tag", ["t0", "t2"], lambda r: r[2] in ("t0", "t2")),
+        "range": ("pop", RangeClause(9, 60),
+                  lambda r: r[4] is not None and 9 <= r[4] <= 60),
+        "exists": ("pop", ExistsClause(kind="num"),
+                   lambda r: r[4] is not None),
+        "must_not": ("tag", MustNotClause("t1"), lambda r: r[2] != "t1"),
+    }[clause]
+    # "extra" is in docs i % 3 != 0, "common" in every doc: a doc
+    # matching both terms keeps its OR score under and / msm=2
+    both = query != {"mode": "or"}
+    keep = [i for i, r in enumerate(rows)
+            if match(r) and (i % 3 != 0 or not both)]
+    _check(eng, "common extra", 10, keep, paths=_every_locus,
+           filters=[(field, value)], **query)
+
+
+def test_fanout_releases_every_broadcast(spark, bf_index, monkeypatch):
+    """Each fanned-out query unpersists the broadcasts it made (tombstones,
+    and the allowed_docs whitelist when one is given) — also on the early
+    return for an empty whitelist — so a serving process stays flat."""
+    from pyspark.broadcast import Broadcast
+
+    from mongoesindexer_spark.operators.topk import get_engine
+    d, rows = bf_index
+    eng = get_engine(spark, d)
+    sc = spark.sparkContext
+    made, released = [], set()
+    orig_broadcast, orig_unpersist = sc.broadcast, Broadcast.unpersist
+
+    def broadcast(value):
+        made.append(orig_broadcast(value))
+        return made[-1]
+
+    def unpersist(self, *a, **kw):
+        released.add(id(self))
+        return orig_unpersist(self, *a, **kw)
+
+    monkeypatch.setattr(sc, "broadcast", broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+    assert len(eng.topk_wand("common extra", 5, use_segments=True)) > 0
+    assert len(eng.topk_wand("common extra", 5, use_segments=True,
+                             filters=[("lang", "en")])) > 0
+    assert len(eng.phrase_topk("common extra", 5, use_segments=True,
+                               allowed_docs=[1, 2, 4, 5])) > 0
+    assert eng.phrase_topk("common extra", 5, use_segments=True,
+                           allowed_docs=[]).empty
+    # tombstones per query, plus the one non-empty whitelist
+    assert len(made) == 4
+    assert all(id(b) in released for b in made)

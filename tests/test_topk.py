@@ -227,3 +227,27 @@ def test_conjunctive_with_delta_segments(spark, tiny_dir, tmp_path):
             got = [(int(d), round(float(s), 9))
                    for d, s in zip(pdf["doc_id"], pdf["score"])]
             assert got == want, (q, kw)
+
+
+def test_block_lru_keeps_the_querys_own_terms(spark, tiny_index,
+                                              oracle_tiny, monkeypatch):
+    """A full block LRU must not evict a cached term of the query it is
+    answering: the term would silently drop out of scoring.  Term a is
+    cached by an earlier query, then a query on a plus two uncached terms
+    overfills a 2-term cache."""
+    import mongoesindexer_spark.operators.topk as topk_mod
+    from mongoesindexer_spark.functions.analysis import analyze_search
+    monkeypatch.setattr(topk_mod, "BLOCK_CACHE_TERMS", 2)
+    a, b, c = sorted(t for t, ds in oracle_tiny.postings.items()
+                     if len(ds) >= 3 and analyze_search(t) == [t])[:3]
+    eng = topk_mod.SearchEngine(spark, tiny_index)
+    try:
+        eng.topk_wand(a, 10, use_segments=False)
+        q = f"{a} {b} {c}"
+        got = eng.topk_wand(q, 50, use_segments=False)
+        want = bm25_topk_df(spark, tiny_index, q, 50).collect()
+        assert [(int(d), round(float(s), 9))
+                for d, s in zip(got["doc_id"], got["score"])] == \
+            [(r["doc_id"], round(r["score"], 9)) for r in want]
+    finally:
+        eng.close()
