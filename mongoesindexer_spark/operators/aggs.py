@@ -2,11 +2,22 @@
 
 An ES request body can carry ``query`` + ``aggs``; the aggregation runs
 over every matching doc (not the top-k page), per shard, and the
-coordinating node merges.  The Spark analog is the same shape Catalyst
-already optimizes: the match set is a distinct-doc_id frame derived from
-the term-filtered postings scan (predicate pushed to parquet), the agg a
-shuffled partial aggregation over it — no driver materialization of the
-hit set, which is what survives a head-term query at 10^12 docs.
+coordinating node merges.  ES never launches a cluster job for a hit set
+a shard holds; this module picks its locus the same way, by the engine's
+one cost model (Σdf of the query terms vs ``SEGMENT_FANOUT_CUTOFF``,
+decided in :func:`_driver_hit_ids` and nowhere else):
+
+- **driver, below the cutoff** — the tombstone-masked hit ids come from
+  the decoded posting blocks the serving kernels use, and
+  :func:`match_set` hands them on as a local relation (no postings scan,
+  no doc_id shuffle).  :func:`search_count` and :func:`search_terms_agg`
+  finish on the driver too and return local frames: zero Spark jobs.
+- **Spark, above it** — the match set is a distinct-doc_id frame derived
+  from the term-filtered postings scan (predicate pushed to parquet), the
+  agg a shuffled partial aggregation over it — no driver materialization
+  of the hit set, which is what survives a head-term query at 10^12 docs.
+
+Both loci return the same columns, types, order and empty results.
 
 Implemented aggs (the reference's ES usage surface — terms fielddata
 aggs and numeric stats are what its keyword/integer mappings serve):
@@ -31,23 +42,45 @@ aggs and numeric stats are what its keyword/integer mappings serve):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from .topk import SearchEngine, _check_msm, _query_terms
 
 
-def match_set(eng: SearchEngine, query_text: str, mode: str = "or",
-              min_should_match: int | None = None) -> DataFrame:
-    """Distinct doc_ids matching the analyzed query — the ES hit set as
-    a DataFrame: one term-pushed postings scan, a doc_id aggregation
-    (counts double as the conjunction/minimum_should_match filter), and
-    the merge-on-read tombstone anti-join."""
+def _unpivot(row: DataFrame, buckets: list, names: tuple[str, str],
+             *keep: str) -> DataFrame:
+    """One-row aggregate → one row per ``(key, column)`` bucket, output
+    columns ``names``, through a typed ``stack``: keys travel as
+    literals, never as SQL text, so caller-supplied bucket names are
+    never parsed."""
+    args = [F.lit(len(buckets))]
+    for key, col in buckets:
+        args += [F.lit(key), col]
+    return row.select(*keep, F.stack(*args).alias(*names))
+
+
+def _check_integral(docs: DataFrame, *cols: str) -> None:
+    """The exact-moment aggs cast their sums to BIGINT, which would
+    silently truncate a fractional column — refuse anything but an
+    integer type."""
+    for f in docs.select(*cols).schema.fields:
+        if not isinstance(f.dataType, IntegralType):
+            raise ValueError(
+                f"column {f.name!r} has type "
+                f"{f.dataType.simpleString()}; this agg needs an "
+                "integer column (its sums are exact BIGINTs)")
+
+
+def _match_set_df(eng: SearchEngine, terms: list[str], mode: str,
+                  min_should_match: int | None) -> DataFrame:
+    """Spark locus of :func:`match_set`: one term-pushed postings scan,
+    a doc_id aggregation (counts double as the conjunction /
+    minimum_should_match filter) and the merge-on-read tombstone
+    anti-join."""
     from .build_index import read_flat
-    _check_msm(mode, min_should_match)
-    terms = _query_terms(query_text, eng.cfg)
-    if not terms:
-        return eng.spark.range(0).select(F.col("id").alias("doc_id"))
     flat = read_flat(eng.cat, eng.spark).filter(F.col("term").isin(terms))
     docs = flat.groupBy("doc_id").agg(F.count("*").alias("n_terms"))
     if mode == "and":
@@ -62,13 +95,59 @@ def match_set(eng: SearchEngine, query_text: str, mode: str = "or",
     return docs
 
 
+def match_set(eng: SearchEngine, query_text: str, mode: str = "or",
+              min_should_match: int | None = None) -> DataFrame:
+    """Distinct doc_ids matching the analyzed query — the ES hit set as
+    a one-column (``doc_id long``) DataFrame.  Below
+    ``SEGMENT_FANOUT_CUTOFF`` it is a local relation of the driver hit
+    ids (:func:`_driver_hit_ids`), so every consumer joins a small local
+    frame; above it, the Spark postings scan + doc_id aggregation."""
+    terms = _query_terms(query_text, eng.cfg)
+    ids = _driver_hit_ids(eng, terms, mode, min_should_match)
+    if ids is not None:
+        # from pandas (Arrow), not from Python rows: a row list goes
+        # through parallelize and launches a Spark job when collected
+        return eng.spark.createDataFrame(pd.DataFrame({"doc_id": ids}),
+                                         "doc_id long")
+    return _match_set_df(eng, terms, mode, min_should_match)
+
+
 def search_count(eng: SearchEngine, query_text: str, mode: str = "or",
                  min_should_match: int | None = None) -> DataFrame:
-    """ES ``_count``: the hit-set cardinality as a one-row frame — the
-    same term-pushed scan + doc_id aggregation as every aggs entry, with
-    a count instead of a bucket step."""
-    return match_set(eng, query_text, mode, min_should_match) \
+    """ES ``_count``: the hit-set cardinality as a one-row
+    ``doc_count`` frame.  Below ``SEGMENT_FANOUT_CUTOFF`` the count is
+    taken on the driver from the hit ids and returned as a local
+    relation (zero Spark jobs); above it, the Spark match set's
+    count."""
+    terms = _query_terms(query_text, eng.cfg)
+    ids = _driver_hit_ids(eng, terms, mode, min_should_match)
+    if ids is not None:
+        return eng.spark.createDataFrame(
+            pd.DataFrame({"doc_count": [ids.size]}), "doc_count long")
+    return _match_set_df(eng, terms, mode, min_should_match) \
         .agg(F.count("*").alias("doc_count"))
+
+
+def _driver_terms_agg(eng: SearchEngine, ids, sub: str,
+                      size: int) -> DataFrame:
+    """Driver locus of :func:`search_terms_agg`: point-read the hit
+    ids' ``fields`` rows (the reader filter clauses use), count the
+    non-null values, ES bucket order, top ``size``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    out = pd.DataFrame({"value": pd.Series([], dtype=object),
+                        "doc_count": pd.Series([], dtype="int64")})
+    if ids.size:
+        tbl = eng._rg_index("fields", "doc_id").read_isin_table(
+            ids.tolist(), ["doc_id", sub])
+        vc = pc.value_counts(tbl[sub].drop_null())
+        if len(vc):
+            out = (pa.table({"value": vc.field("values"),
+                             "doc_count": vc.field("counts")})
+                   .sort_by([("doc_count", "descending"),
+                             ("value", "ascending")])
+                   .slice(0, size).to_pandas())
+    return eng.spark.createDataFrame(out, "value string, doc_count long")
 
 
 def search_terms_agg(eng: SearchEngine, query_text: str, field: str,
@@ -77,13 +156,20 @@ def search_terms_agg(eng: SearchEngine, query_text: str, field: str,
                      min_should_match: int | None = None) -> DataFrame:
     """ES ``terms`` agg on ``<field>_keyword``/``_normalized`` over the
     query's hit set: per-value doc counts, ES bucket order (count desc,
-    value asc), top ``size`` buckets.  One shuffle for the match set,
-    one for the bucket counts — the same two-phase shape ES executes
-    per shard + coordinator merge."""
+    value asc), top ``size`` buckets, as ``value string, doc_count
+    long``.  Below ``SEGMENT_FANOUT_CUTOFF`` the hit ids' ``fields``
+    rows are point-read and counted on the driver (a local relation,
+    zero Spark jobs); above it, one shuffle for the match set and one
+    for the bucket counts — the same two-phase shape ES executes per
+    shard + coordinator merge."""
     from .build_index import read_fields
     sub = f"{field}_{'normalized' if normalized else 'keyword'}"
+    terms = _query_terms(query_text, eng.cfg)
+    ids = _driver_hit_ids(eng, terms, mode, min_should_match)
+    if ids is not None:
+        return _driver_terms_agg(eng, ids, sub, size)
     fields = read_fields(eng.cat, eng.spark).select("doc_id", sub)
-    hits = match_set(eng, query_text, mode, min_should_match)
+    hits = _match_set_df(eng, terms, mode, min_should_match)
     return (fields.join(hits, "doc_id", "semi")
             .filter(F.col(sub).isNotNull())
             .groupBy(F.col(sub).alias("value"))
@@ -152,8 +238,8 @@ def search_range_agg(eng: SearchEngine, docs: DataFrame, query_text: str,
 
     One pass: each range is a conditional sum inside a single global
     aggregate (map-side partials), then the one-row result unpivots to
-    (key, doc_count) rows via ``stack`` — N ranges never cost N scans,
-    and nothing hit-set-sized reaches the driver."""
+    (key, doc_count) rows via :func:`_unpivot` — N ranges never cost N
+    scans, and nothing hit-set-sized reaches the driver."""
     if not ranges:
         raise ValueError("range agg needs at least one range")
     hits = match_set(eng, query_text, mode, min_should_match)
@@ -171,10 +257,9 @@ def search_range_agg(eng: SearchEngine, docs: DataFrame, query_text: str,
                                F.lit(0)).cast("long").alias(f"_b{i}"))
         keys.append(f"{'*' if frm is None else float(frm)}-"
                     f"{'*' if to is None else float(to)}")
-    row = scoped.agg(*aggs)
-    stack = ", ".join(f"'{k}', _b{i}" for i, k in enumerate(keys))
-    return row.select(F.expr(
-        f"stack({len(keys)}, {stack}) AS (key, doc_count)"))
+    return _unpivot(scoped.agg(*aggs),
+                    [(k, F.col(f"_b{i}")) for i, k in enumerate(keys)],
+                    ("key", "doc_count"))
 
 
 def search_extended_stats_agg(eng: SearchEngine, docs: DataFrame,
@@ -186,7 +271,9 @@ def search_extended_stats_agg(eng: SearchEngine, docs: DataFrame,
     (population, ES default) and std_deviation over the hit set.  The
     moments derive from EXACT integer sums (count, sum, sum_sq are
     BIGINT for integer doc values), so an oracle can reproduce the
-    derived doubles bit-for-bit — no aggregation-order float drift."""
+    derived doubles bit-for-bit — no aggregation-order float drift.
+    ``num_col`` must be an integer column (ValueError otherwise)."""
+    _check_integral(docs, num_col)
     hits = match_set(eng, query_text, mode, min_should_match)
     scoped = (docs.select("doc_id", num_col).join(hits, "doc_id", "semi")
               .filter(F.col(num_col).isNotNull()))
@@ -244,7 +331,9 @@ def search_weighted_avg_agg(eng: SearchEngine, docs: DataFrame,
     entirely; a NULL value with a live weight is skipped too (no
     ``value.missing`` default configured).  The two sums are exact
     BIGINTs for integer columns, so the derived double is
-    oracle-reproducible; one scalar aggregate."""
+    oracle-reproducible; one scalar aggregate.  Both columns must be
+    integers (ValueError otherwise)."""
+    _check_integral(docs, value_col, weight_col)
     hits = match_set(eng, query_text, mode, min_should_match)
     scoped = (docs.select("doc_id", value_col, weight_col)
               .join(hits, "doc_id", "semi")
@@ -311,13 +400,11 @@ def search_percentile_ranks_agg(eng: SearchEngine, docs: DataFrame,
         aggs.append(F.coalesce(
             F.sum(F.when(c <= float(x), 1).otherwise(0)), F.lit(0))
             .cast("long").alias(f"_le{i}"))
-    row = scoped.agg(*aggs)
-    stack = ", ".join(
-        f"CAST({float(x)} AS DOUBLE), _le{i}" for i, x in
-        enumerate(values))
-    return (row.select("_n", F.expr(
-        f"stack({len(values)}, {stack}) AS (value, n_le)"))
-        .select("value", "n_le",
+    row = _unpivot(scoped.agg(*aggs),
+                   [(float(x), F.col(f"_le{i}"))
+                    for i, x in enumerate(values)],
+                   ("value", "n_le"), "_n")
+    return (row.select("value", "n_le",
                 F.when(F.col("_n") > 0,
                        F.col("n_le") * 100.0 / F.col("_n"))
                 .otherwise(0.0).alias("rank_pct")))
@@ -367,11 +454,10 @@ def search_adjacency_matrix_agg(eng: SearchEngine,
     conds = [F.coalesce(F.sum(F.when(pred, 1).otherwise(0)), F.lit(0))
              .cast("long").alias(f"_b{i}")
              for i, (_, pred) in enumerate(buckets)]
-    row = perdoc.agg(*conds)
-    stack = ", ".join(f"'{nm}', _b{i}"
-                      for i, (nm, _) in enumerate(buckets))
-    return (row.select(F.expr(
-        f"stack({len(buckets)}, {stack}) AS (bucket, doc_count)"))
+    return (_unpivot(perdoc.agg(*conds),
+                     [(nm, F.col(f"_b{i}"))
+                      for i, (nm, _) in enumerate(buckets)],
+                     ("bucket", "doc_count"))
         .filter(F.col("doc_count") > 0)
         .orderBy("bucket"))
 
@@ -621,7 +707,8 @@ def search_filters_agg(eng: SearchEngine,
     matched, ``and``: all matched) as a conditional sum in one global
     aggregate — N buckets never cost N scans (a 20-filter dashboard
     pays one pass, not 20).  The one-row result unpivots driver-trivially
-    via ``stack``; buckets whose query analyzes to no live terms count 0.
+    via :func:`_unpivot`; buckets whose query analyzes to no live terms
+    count 0.
     """
     if not filters:
         raise ValueError("filters agg needs at least one named filter")
@@ -651,12 +738,11 @@ def search_filters_agg(eng: SearchEngine,
             conds.append(F.coalesce(F.sum(F.when(hit, 1).otherwise(0)),
                                     F.lit(0)).cast("long").alias(f"_b{i}"))
         row = perdoc.agg(*conds)
-    stack = ", ".join(
-        f"'{n}', " + (f"_b{i}" if union_terms else "CAST(0 AS BIGINT)")
-        for i, n in enumerate(names))
-    return (row.select(F.expr(
-        f"stack({len(names)}, {stack}) AS (bucket, doc_count)"))
-        .orderBy("bucket"))
+    return (_unpivot(row, [(n, F.col(f"_b{i}") if union_terms
+                            else F.lit(0).cast("long"))
+                           for i, n in enumerate(names)],
+                     ("bucket", "doc_count"))
+            .orderBy("bucket"))
 
 
 def _after_predicate(cols, after):
@@ -721,13 +807,14 @@ def search_composite_agg(eng: SearchEngine, query_text: str,
 
 def _driver_hit_ids(eng: SearchEngine, terms: list[str], mode: str,
                     min_should_match: int | None) -> "object | None":
-    """The query's hit-set doc_ids computed DRIVER-SIDE from the decoded
-    posting blocks — exactly the candidate set the serving kernels
-    decode — or None when the candidate posting count exceeds
-    SEGMENT_FANOUT_CUTOFF (the engine's one cost model for what may
-    materialize on the driver).  Tombstone-masked.  Used by aggs whose
-    distributed shape can replace a shuffled semi-join with a broadcast
-    of these ids when the hit set is kernel-bounded."""
+    """The locus decision of every hit-set agg — the only
+    ``SEGMENT_FANOUT_CUTOFF`` check in this module.  When the query
+    terms' Σdf is below the cutoff (the engine's one cost model for what
+    may materialize on the driver), the hit-set doc_ids computed
+    DRIVER-SIDE from the decoded posting blocks — exactly the candidate
+    set the serving kernels decode — tombstone-masked, as an int64
+    array (empty for no live terms).  At or above it, None: the caller
+    takes the Spark locus."""
     import numpy as np
 
     from .topk import SEGMENT_FANOUT_CUTOFF, _block_arrays
@@ -786,24 +873,22 @@ def search_significant_terms_agg(eng: SearchEngine, query_text: str,
     if size <= 0:
         raise ValueError("size must be positive")
     terms = _query_terms(query_text, eng.cfg)
-    ids = _driver_hit_ids(eng, terms, mode, min_should_match) if terms \
-        else None
+    ids = _driver_hit_ids(eng, terms, mode, min_should_match)
     if ids is not None:
-        import pandas as pd
         if ids.size == 0:
             return eng.spark.createDataFrame(
                 [], "term string, score double, fg_df long, bg_df long")
-        hits = eng.spark.createDataFrame(
-            pd.DataFrame({"doc_id": ids}))
+        hits = eng.spark.createDataFrame(pd.DataFrame({"doc_id": ids}),
+                                         "doc_id long")
         nfg = eng.spark.createDataFrame(
-            [(float(ids.size),)], "nfg double")
+            pd.DataFrame({"nfg": [float(ids.size)]}), "nfg double")
         fg = (read_flat(eng.cat, eng.spark).select("term", "doc_id")
               .filter(F.col("doc_id").between(int(ids.min()),
                                               int(ids.max())))
               .join(F.broadcast(hits), "doc_id", "semi")
               .groupBy("term").agg(F.count("*").alias("fg_df")))
     else:
-        hits = match_set(eng, query_text, mode, min_should_match)
+        hits = _match_set_df(eng, terms, mode, min_should_match)
         # the hit count rides the SAME plan as a broadcast one-row
         # frame — no eager driver job, the agg stays one lazy DataFrame
         nfg = hits.agg(F.count("*").cast("double").alias("nfg"))

@@ -281,22 +281,25 @@ def match_bool_prefix_topk(spark: SparkSession, index_dir: str,
     vocab = eng._rg_index("term_dict", "term").read_range(
         prefix, prefix + _HI, ["term", "df"])
     expansions = sorted(vocab["term"].astype(str).tolist())
-    # enforce the driver budget the docstring promises: the prefix
-    # clause's doc-set union decodes the expansions' postings
-    # driver-side, so Σ df must fit the kernel locus — a head-prefix
-    # autocomplete at corpus scale belongs on the completion table (T7)
-    pref_df_sum = int(vocab["df"].sum()) if len(vocab) else 0
-    if pref_df_sum >= SEGMENT_FANOUT_CUTOFF:
-        raise ValueError(
-            f"prefix {prefix!r} expands to Σdf {pref_df_sum} ≥ "
-            f"{SEGMENT_FANOUT_CUTOFF} postings — too broad for the "
-            "driver locus; serve broad autocomplete from the "
-            "completion table (SearchEngine.suggest, T7) or lengthen "
-            "the prefix")
-    pref_docs = _terms_doc_set(eng, expansions)["doc_id"] \
-        .to_numpy(np.int64)
     meta = eng._term_meta(full) if full else {}
     live = [t for t in full if meta.get(t) is not None]
+    # enforce the driver budget the docstring promises: the prefix
+    # clause's doc-set union and the term clauses both decode their
+    # postings driver-side, so Σ df over the expansions AND the terms
+    # must fit the kernel locus — a head-prefix autocomplete at corpus
+    # scale belongs on the completion table (T7)
+    total_df = (int(vocab["df"].sum()) if len(vocab) else 0) \
+        + sum(meta[t][1] for t in live)
+    if total_df >= SEGMENT_FANOUT_CUTOFF:
+        raise ValueError(
+            "match_bool_prefix exceeds the driver candidate budget (Σdf "
+            f"{total_df} ≥ {SEGMENT_FANOUT_CUTOFF} over the prefix "
+            f"{prefix!r} expansions and the term clauses); serve broad "
+            "autocomplete from the completion table "
+            "(SearchEngine.suggest, T7), lengthen the prefix or narrow "
+            "the terms")
+    pref_docs = _terms_doc_set(eng, expansions)["doc_id"] \
+        .to_numpy(np.int64)
     if operator == "and" and (len(live) < len(full)
                               or pref_docs.size == 0):
         return empty

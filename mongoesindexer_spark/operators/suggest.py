@@ -59,13 +59,28 @@ def pair_cf(eng: SearchEngine, a: str, b: str) -> int:
     sets (block-pruned, rarer term bounds the cost), then count
     positions p of ``a`` with ``b`` at p+1 via the packed
     (candidate_index << 32 | position) key test the phrase kernel
-    uses.  Memoized per engine snapshot (`eng._pair_cf_cache`)."""
-    cache = getattr(eng, "_pair_cf_cache", None)
-    if cache is None:
-        cache = eng._pair_cf_cache = {}
-    hit = cache.get((a, b))
-    if hit is not None:
-        return hit
+    uses.  Memoized per engine snapshot in a bounded LRU
+    (``eng._pair_cf_cache``, ``TD_CACHE_TERMS`` pairs), so a long-lived
+    serving process does not grow with every distinct pair it sees."""
+    from .topk import TD_CACHE_TERMS
+    key = (a, b)
+    cache = eng._pair_cf_cache
+    with eng._cache_lock:
+        hit = cache.pop(key, None)
+        if hit is not None:
+            cache[key] = hit            # re-insert: most recently used
+            return hit
+    out = _pair_cf(eng, a, b)
+    with eng._cache_lock:
+        cache[key] = out
+        # evict only after the answer is built (as SearchEngine._term_meta)
+        while len(cache) > TD_CACHE_TERMS:
+            del cache[next(iter(cache))]
+    return out
+
+
+def _pair_cf(eng: SearchEngine, a: str, b: str) -> int:
+    """:func:`pair_cf` without the memo."""
     # driver budget: a head-term pair must not decode its full posting
     # blocks driver-side.  Returning 0 routes the language model to its
     # backoff leg — exactly the model's own degradation mechanism
@@ -77,7 +92,6 @@ def pair_cf(eng: SearchEngine, a: str, b: str) -> int:
     if any(meta.get(t) is None for t in (a, b)) or \
             sum(m[1] for m in meta.values() if m is not None) \
             >= SEGMENT_FANOUT_CUTOFF:
-        cache[(a, b)] = 0
         return 0
     by_term = eng._term_blocks([a, b])
     out = 0
@@ -112,7 +126,6 @@ def pair_cf(eng: SearchEngine, a: str, b: str) -> int:
                 keys[t] = np.concatenate(runs) if runs else \
                     np.empty(0, np.int64)
             out = int(np.isin(keys[a] + 1, keys[b]).sum())
-    cache[(a, b)] = out
     return out
 
 

@@ -794,3 +794,151 @@ def test_string_stats_agg(spark, agg_index, tiny_pages, oracle_tiny):
     ent = -sum((n / tot) * math.log2(n / tot)
                for _, n in sorted(cc.items()))
     assert abs(float(got["entropy"]) - ent) < 1e-9
+
+
+def test_bucket_names_are_literals_not_sql(spark, agg_index, oracle_tiny):
+    """Caller-supplied bucket names reach the unpivot as typed literals:
+    quotes and SQL fragments come back verbatim as bucket keys."""
+    from mongoesindexer_spark.operators.aggs import (
+        search_adjacency_matrix_agg, search_filters_agg)
+    from mongoesindexer_spark.operators.topk import get_engine
+    eng = get_engine(spark, agg_index)
+    a, b = "o'brien", "x', 1) AS (a, b) --"
+    flt = {a: ("udrndau", "or"), b: ("atreq kni", "and")}
+    sa = _hit_set(oracle_tiny, "udrndau")
+    sb = _hit_set(oracle_tiny, "atreq kni", mode="and")
+    got = search_filters_agg(eng, flt)
+    assert got.dtypes == [("bucket", "string"), ("doc_count", "bigint")]
+    assert [tuple(r) for r in got.collect()] == \
+        sorted([(a, len(sa)), (b, len(sb))])
+    got = {r.bucket: r.doc_count
+           for r in search_adjacency_matrix_agg(eng, flt).collect()}
+    want = {a: len(sa), b: len(sb), f"{a}&{b}": len(sa & sb)}
+    assert got == {k: v for k, v in want.items() if v > 0}
+    dead = search_filters_agg(eng, {a: ("zzznotaterm", "or")})
+    assert dead.dtypes == [("bucket", "string"), ("doc_count", "bigint")]
+    assert [tuple(r) for r in dead.collect()] == [(a, 0)]
+
+
+def test_exact_moment_aggs_refuse_fractional_columns(spark, agg_index):
+    """extended_stats and weighted_avg sum into BIGINT: a double column
+    would be truncated, so it is refused by name and type."""
+    from mongoesindexer_spark.operators.aggs import (
+        search_extended_stats_agg, search_weighted_avg_agg)
+    from mongoesindexer_spark.operators.topk import get_engine
+    eng = get_engine(spark, agg_index)
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": np.arange(10, dtype=np.int64),
+        "iv": np.arange(10, dtype=np.int64),
+        "dv": np.arange(10, dtype=np.float64) + 0.5}))
+    with pytest.raises(ValueError, match="'dv' has type double"):
+        search_extended_stats_agg(eng, docs, "udrndau", "dv")
+    with pytest.raises(ValueError, match="'dv' has type double"):
+        search_weighted_avg_agg(eng, docs, "udrndau", "dv", "iv")
+    with pytest.raises(ValueError, match="'dv' has type double"):
+        search_weighted_avg_agg(eng, docs, "udrndau", "iv", "dv")
+
+
+_LOCUS_Q = "udrndau atreq kni"
+
+
+@pytest.fixture(scope="module")
+def synced_agg_index(spark, agg_index, tiny_pages, oracle_tiny,
+                     tmp_path_factory):
+    """``agg_index`` after one change batch: one hit of the locus query
+    deleted, another updated with a new lang value — tombstones plus a
+    delta ``fields`` generation."""
+    import shutil
+
+    from mongoesindexer_spark.sources.catalog import ParquetCatalog
+    from mongoesindexer_spark.streaming.incremental import \
+        IncrementalIndexer
+    d = str(tmp_path_factory.mktemp("idx-aggs-synced")) + "/idx"
+    shutil.copytree(agg_index, d)
+    n_fields = len(ParquetCatalog(d).data_files("fields"))
+    rows = tiny_pages.sort_values("url").reset_index(drop=True)
+    gone, upd = sorted(_hit_set(oracle_tiny, _LOCUS_Q))[:2]
+    batch = []
+    for op, i, lang in (("delete", gone, rows["lang"].iloc[gone]),
+                        ("update", upd, "de")):
+        r = rows.iloc[i]
+        text = r["text"] if isinstance(r["text"], str) else ""
+        ts = r["warc_ts"] + pd.Timedelta(hours=1)
+        batch.append({"op": op, "url": r["url"], "warc_ts": ts,
+                      "html": None, "text": f"{text} {_LOCUS_Q}",
+                      "lang": lang})
+    IncrementalIndexer(d).apply_updates(
+        spark, spark.createDataFrame(pd.DataFrame(batch)),
+        batch_id="aggs-loci")
+    cat = ParquetCatalog(d)
+    assert cat.table_exists("tombstones")
+    assert len(cat.data_files("fields")) > n_fields
+    return d
+
+
+def _run_agg(spark, eng, agg, kw):
+    from mongoesindexer_spark.operators import aggs
+    if agg == "count":
+        return aggs.search_count(eng, _LOCUS_Q, **kw)
+    if agg == "terms":
+        return aggs.search_terms_agg(eng, _LOCUS_Q, "lang", **kw)
+    if agg == "cardinality":
+        return aggs.search_cardinality_agg(eng, _LOCUS_Q, "lang", **kw)
+    from pyspark.sql import functions as F
+    docs = spark.range(600).select(F.col("id").alias("doc_id"),
+                                   (F.col("id") * 7 % 101).alias("nv"))
+    return aggs.search_stats_agg(eng, docs, _LOCUS_Q, "nv", **kw)
+
+
+def _jobs_launched(spark, fn):
+    """(result, Spark jobs launched while ``fn`` ran), counted through
+    a job group and the status tracker."""
+    import uuid
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    free0 = set(tracker.getJobIdsForGroup(None))
+    group = f"aggs-zero-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    free = set(tracker.getJobIdsForGroup(None)) - free0
+    return out, len(set(tracker.getJobIdsForGroup(group)) | free)
+
+
+@pytest.mark.parametrize("agg,kw", [
+    ("count", {}),
+    ("count", {"mode": "and"}),
+    ("count", {"min_should_match": 2}),
+    ("terms", {}),
+    ("terms", {"normalized": True}),
+    ("terms", {"size": 2}),
+    ("terms", {"mode": "and"}),
+    ("terms", {"min_should_match": 2}),
+    ("stats", {}),
+    ("cardinality", {}),
+])
+def test_hit_set_aggs_same_on_both_loci(spark, synced_agg_index,
+                                        monkeypatch, agg, kw):
+    """Below SEGMENT_FANOUT_CUTOFF the hit-set aggs run on the driver
+    (count and terms launch no Spark job at all); forcing the cutoff to
+    1 moves them to the Spark locus.  Both give the same rows and column
+    types, on an index carrying tombstones and a delta ``fields``
+    generation."""
+    import mongoesindexer_spark.operators.topk as topk_mod
+    from mongoesindexer_spark.operators.topk import get_engine
+    eng = get_engine(spark, synced_agg_index)
+
+    def collected():
+        df = _run_agg(spark, eng, agg, kw)
+        return df.dtypes, df.collect()
+    drv, n_jobs = _jobs_launched(spark, collected)
+    if agg in ("count", "terms"):
+        assert n_jobs == 0
+    monkeypatch.setattr(topk_mod, "SEGMENT_FANOUT_CUTOFF", 1)
+    assert collected() == drv
+    assert drv[1]
+    if agg == "terms" and "size" not in kw:
+        # the updated doc's value lives only in the delta generation
+        assert "de" in {r["value"] for r in drv[1]}

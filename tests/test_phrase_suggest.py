@@ -145,3 +145,27 @@ def test_pair_cf_budget_backoff(spark, ps_index):
     finally:
         tk.SEGMENT_FANOUT_CUTOFF = orig
         eng._pair_cf_cache = {}
+
+
+def test_pair_cf_cache_is_bounded(spark, ps_index, monkeypatch):
+    """The bigram memo is an LRU of TD_CACHE_TERMS pairs: more distinct
+    pairs than the bound keep it at the bound, holding the most recent
+    ones with exact counts; close() empties it."""
+    import mongoesindexer_spark.operators.topk as tk
+    from mongoesindexer_spark.operators.suggest import pair_cf
+    d, rows = ps_index
+    eng = tk.SearchEngine(spark, d)
+    monkeypatch.setattr(tk, "TD_CACHE_TERMS", 3)
+    pairs = [("apache", "spark"), ("apache", "spare"), ("spare", "parts"),
+             ("spark", "engine"), ("spare", "tyre"), ("apache", "httpd")]
+    for i, (a, b) in enumerate(pairs):
+        assert pair_cf(eng, a, b) == _brute_pair_cf(rows, a, b)
+        assert len(eng._pair_cf_cache) == min(i + 1, 3)
+    assert list(eng._pair_cf_cache) == pairs[-3:]
+    # a hit refreshes recency: the oldest survivor outlives the next miss
+    assert pair_cf(eng, *pairs[3]) == _brute_pair_cf(rows, *pairs[3])
+    pair_cf(eng, "spark", "jobs")
+    assert list(eng._pair_cf_cache) == [pairs[5], pairs[3],
+                                        ("spark", "jobs")]
+    eng.close()
+    assert eng._pair_cf_cache == {}

@@ -314,3 +314,20 @@ def test_match_bool_prefix_budget_guard(spark, qs_index):
             match_bool_prefix_topk(spark, d, "alpha bet", 5)
     finally:
         qsm.SEGMENT_FANOUT_CUTOFF = orig
+
+
+def test_match_bool_prefix_budget_counts_term_clauses(spark, qs_index,
+                                                      monkeypatch):
+    """The term clauses' df counts toward the same driver budget as the
+    prefix expansions: a cutoff the prefix alone stays under still
+    refuses once the full-term clause is added."""
+    import mongoesindexer_spark.operators.query_string as qsm
+    from mongoesindexer_spark.operators.query_string import \
+        match_bool_prefix_topk
+    d, rows = qs_index
+    pref_df = sum(any(w.startswith("bet") for w in t.split())
+                  for _, t in rows)
+    monkeypatch.setattr(qsm, "SEGMENT_FANOUT_CUTOFF", pref_df + 1)
+    assert len(match_bool_prefix_topk(spark, d, "bet", 5)) == 5
+    with pytest.raises(ValueError, match="driver candidate budget"):
+        match_bool_prefix_topk(spark, d, "common bet", 5)

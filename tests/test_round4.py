@@ -326,16 +326,27 @@ def test_lifecycle_through_explicit_filesystem(spark, tiny_dir, tiny_queries,
 
 
 def test_search_after_pages_reconstruct_full_ranking(spark, tiny_index,
-                                                     tiny_queries):
+                                                     tiny_queries,
+                                                     monkeypatch):
     """Paging with the previous page's last (score, doc_id) cursor must
     walk the exact full ranking, page by page, on every serving path and
     kernel (the ES search_after contract: strictly after the cursor in
-    (score desc, doc_id asc) order, no skips, no repeats)."""
+    (score desc, doc_id asc) order, no skips, no repeats).
+
+    The fan-out walk launches one Spark job per 3-hit page (~270 jobs),
+    and a job's cost grows with its task count, so the fan-out is capped
+    at 4 multi-file groups: still a cross-group merge of per-group
+    cursors, with 4 tasks per page instead of 2 × defaultParallelism."""
     import pandas as pd
 
+    from mongoesindexer_spark.operators import topk as topk_mod
     from mongoesindexer_spark.operators.topk import get_engine
 
+    monkeypatch.setattr(topk_mod, "SEGMENT_MAX_GROUPS", 4)
     eng = get_engine(spark, tiny_index)
+    groups = eng._segment_groups()
+    assert len(groups) == 4 and any(len(g) > 1 for g in groups), \
+        "fan-out is not a multi-group merge — test is vacuous"
     queries = list(tiny_queries["query_text"].head(4))
     for q in queries:
         for mode in ("or", "and"):
