@@ -47,7 +47,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
-from .topk import SearchEngine, _check_msm, _query_terms
+from .topk import (SearchEngine, _check_msm, _query_terms,
+                   drop_tombstoned)
 
 
 def _unpivot(row: DataFrame, buckets: list, names: tuple[str, str],
@@ -88,10 +89,7 @@ def _match_set_df(eng: SearchEngine, terms: list[str], mode: str,
     elif min_should_match is not None:
         docs = docs.filter(F.col("n_terms") >= min_should_match)
     docs = docs.select("doc_id")
-    if eng.tombstones:
-        ts = eng.spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        docs = docs.join(F.broadcast(ts), "doc_id", "left_anti")
+    docs = drop_tombstoned(docs, eng)
     return docs
 
 
@@ -433,10 +431,7 @@ def search_adjacency_matrix_agg(eng: SearchEngine,
     flat = (read_flat(eng.cat, eng.spark)
             .filter(F.col("term").isin(union_terms))
             .select("term", "doc_id"))
-    if eng.tombstones:
-        ts = eng.spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        flat = flat.join(F.broadcast(ts), "doc_id", "left_anti")
+    flat = drop_tombstoned(flat, eng)
     counts = [F.sum(F.when(F.col("term").isin(ts), 1).otherwise(0))
               .alias(f"_n{i}") if ts else F.lit(0).alias(f"_n{i}")
               for i, ts in enumerate(terms_by[n] for n in names)]
@@ -722,10 +717,7 @@ def search_filters_agg(eng: SearchEngine,
         flat = (read_flat(eng.cat, eng.spark)
                 .filter(F.col("term").isin(union_terms))
                 .select("term", "doc_id"))
-        if eng.tombstones:
-            ts = eng.spark.createDataFrame(
-                [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-            flat = flat.join(F.broadcast(ts), "doc_id", "left_anti")
+        flat = drop_tombstoned(flat, eng)
         counts = [F.sum(F.when(F.col("term").isin(ts), 1).otherwise(0))
                   .alias(f"_n{i}") if ts else F.lit(0).alias(f"_n{i}")
                   for i, ts in enumerate(terms_by[n] for n in names)]

@@ -585,6 +585,50 @@ def completion_from_term_dict(td: DataFrame, n_parts: int) -> DataFrame:
         .sortWithinPartitions("prefix", F.desc("weight"), "term")
 
 
+def write_term_dict(cat: ParquetCatalog, counts: DataFrame, n_docs: int,
+                    completion_parts: int | None) -> None:
+    """Commit ``counts`` (term, df, cf) plus the BM25 idf over ``n_docs``
+    as ``term_dict``, sorted within partitions by term (no exchange), so
+    term point reads prune on row-group stats.  With
+    ``completion_parts``, ``completion`` is rewritten from the same frame
+    in a second thread.  Shared by the build's term_dict stage and both
+    incremental-sync loci, so every generation's idf is the same float
+    expression.
+
+    Both writes are vocab-derived jobs whose cost is fixed scheduling and
+    commit latency at any corpus size, so overlapping them takes one of
+    the two off the serial driver span.  The frame is persisted so its
+    aggregate runs once; Spark job submission is thread-safe per session.
+    A crash between the two commits is safe for both callers: the build
+    keeps a lineage marker per table, and sync recovery rolls both
+    tables back."""
+    import threading
+    td = counts.withColumn(
+        "idf", F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5)
+                     / (F.col("df") + 0.5))).persist()
+    comp_err: list[BaseException] = []
+
+    def _completion_write() -> None:
+        try:
+            cat.overwrite(completion_from_term_dict(td, completion_parts),
+                          "completion")
+        except BaseException as e:  # surface on the main thread
+            comp_err.append(e)
+
+    t = None
+    if completion_parts is not None:
+        t = threading.Thread(target=_completion_write, daemon=True)
+        t.start()
+    try:
+        cat.overwrite(td.sortWithinPartitions("term"), "term_dict")
+    finally:
+        if t is not None:
+            t.join()
+        td.unpersist()
+    if comp_err:
+        raise comp_err[0]
+
+
 def read_flat(cat: ParquetCatalog, spark: SparkSession) -> DataFrame:
     """Postings rows of the flat table (markers filtered; pushed to scan)."""
     return (cat.read(spark, "postings_flat")
@@ -596,6 +640,15 @@ def read_doc_markers(cat: ParquetCatalog, spark: SparkSession) -> DataFrame:
     return (cat.read(spark, "postings_flat")
             .filter(F.col("term").isNull())
             .select("doc_id", "url", "doc_len"))
+
+
+def normalize_keywords(values: pd.Series) -> pd.Series:
+    """``<col>_normalized`` values from ``<col>_keyword`` values (keyword
+    tokenizer → lowercase → asciifolding; None stays None) — the one
+    sub-field kernel behind :func:`fields_subfields` and the sync's
+    driver locus."""
+    from ..functions.analysis import normalize
+    return values.map(lambda v: normalize(v) if isinstance(v, str) else None)
 
 
 def fields_subfields(df: DataFrame, cols: list[str],
@@ -610,12 +663,7 @@ def fields_subfields(df: DataFrame, cols: list[str],
     ``fields`` table is computed identically."""
     from pyspark.sql.functions import pandas_udf
 
-    from ..functions.analysis import normalize
-
-    @pandas_udf("string")
-    def _norm(col: pd.Series) -> pd.Series:
-        return col.map(lambda v: normalize(v) if isinstance(v, str) else None)
-
+    _norm = pandas_udf(normalize_keywords, "string")
     base = list(dict.fromkeys(list(cols) + list(numeric_cols)))
     out = df.select("doc_id", *[F.col(c) for c in base])
     for c in cols:
@@ -1117,43 +1165,12 @@ class IndexBuilder:
             # normally prevents ever reaching this)
             src = read_flat(self.catalog, spark).groupBy("term").agg(
                 F.count("*").alias("df"), F.sum("tf").cast("long").alias("cf"))
-        td = src.withColumn(
-            "idf",
-            F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-        # Overlap the completion write with the term_dict write: both are
-        # vocab-derived jobs whose cost is fixed scheduling/commit latency
-        # at any corpus size (profiled 0.8 s + 1.4 s back-to-back on the
-        # wide scaling leg — ~5% of that build, pure serial driver span).
-        # td is persisted so the blocks-metadata aggregate runs once;
-        # Spark job submission is thread-safe per session.  Crash between
-        # the two commits is resume-safe either way: each table has its
-        # own lineage marker and _stage_completion rebuilds from the
-        # committed term_dict table.
-        import threading
-        td = td.persist()
-        comp_err: list[BaseException] = []
-
-        def _completion_write() -> None:
-            try:
-                if not self.lineage.stage_complete("completion"):
-                    n_parts = max(1, min(self.n_buckets,
-                                         spark.sparkContext.defaultParallelism))
-                    self.catalog.overwrite(
-                        completion_from_term_dict(td, n_parts), "completion")
-                    self.lineage.mark_stage("completion")
-            except BaseException as e:  # surface on the main thread
-                comp_err.append(e)
-
-        t = threading.Thread(target=_completion_write, daemon=True)
-        t.start()
-        # in-partition term sort (no exchange): query-time term point
-        # reads prune on row-group stats, which need clustered terms
-        self.catalog.overwrite(td.sortWithinPartitions("term"), "term_dict")
-        t.join()
-        td.unpersist()
-        if comp_err:
-            raise comp_err[0]
+        comp_parts = None if self.lineage.stage_complete("completion") \
+            else max(1, min(self.n_buckets,
+                            spark.sparkContext.defaultParallelism))
+        write_term_dict(self.catalog, src, n_docs, comp_parts)
+        if comp_parts is not None:
+            self.lineage.mark_stage("completion")
         self.lineage.mark_stage("term_dict")
 
     def _stage_completion(self, spark: SparkSession) -> None:

@@ -36,8 +36,8 @@ from pyspark.sql import functions as F
 
 from ..functions.encode import decode_blocks_into
 from .multi_match import multi_match_topk
-from .topk import (SearchEngine, _check_k, _query_terms, get_engine,
-                   match_scores_arrays)
+from .topk import (SearchEngine, _check_k, _query_terms, drop_tombstoned,
+                   get_engine, match_scores_arrays)
 
 
 def dis_max_topk(spark: SparkSession, index_dirs: dict[str, str],
@@ -135,10 +135,7 @@ def _boosting_df(eng: SearchEngine, positive: str, negative: str, k: int,
     from .aggs import match_set
     from .multi_match import _field_scores_df
     pos = _field_scores_df(eng, positive, 1.0)
-    if eng.tombstones:
-        ts = eng.spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        pos = pos.join(F.broadcast(ts), "doc_id", "left_anti")
+    pos = drop_tombstoned(pos, eng)
     neg = match_set(eng, negative).withColumn("neg", F.lit(True))
     demoted = (pos.join(neg, "doc_id", "left")
                .withColumn("score",

@@ -31,8 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .topk import SearchEngine, _query_terms, get_engine, \
-    match_scores_arrays
+from .topk import SearchEngine, _query_terms, drop_tombstoned, \
+    get_engine, match_scores_arrays
 
 MODIFIERS = ("none", "log1p", "sqrt")
 BOOST_MODES = ("multiply", "sum")
@@ -225,10 +225,7 @@ def _decay_score_df(eng: SearchEngine, query_text: str, k: int, sub: str,
     from .multi_match import _field_scores_df
     bm25 = _field_scores_df(eng, query_text, 1.0) \
         .withColumnRenamed("score", "bm25")
-    if eng.tombstones:
-        ts = eng.spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        bm25 = bm25.join(F.broadcast(ts), "doc_id", "left_anti")
+    bm25 = drop_tombstoned(bm25, eng)
     vals = read_fields(eng.cat, eng.spark).select("doc_id", sub)
     w = _decay_col(F.coalesce(F.col(sub).cast("double"),
                               F.lit(float(missing))),
@@ -255,10 +252,7 @@ def _function_score_df(eng: SearchEngine, query_text: str, k: int,
     from .build_index import read_fields, read_flat
     terms = _query_terms(query_text, eng.cfg)
     flat = read_flat(eng.cat, eng.spark).filter(F.col("term").isin(terms))
-    if eng.tombstones:
-        ts = eng.spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        flat = flat.join(F.broadcast(ts), "doc_id", "left_anti")
+    flat = drop_tombstoned(flat, eng)
     td = eng.cat.read(eng.spark, "term_dict").filter(F.col("term").isin(terms))
     bm25 = (flat.join(F.broadcast(td.select("term", "idf")), "term")
             .withColumn("contrib",

@@ -59,8 +59,8 @@ from pyspark.sql import functions as F
 
 from ..functions.encode import decode_blocks_into
 from .topk import (EXHAUSTIVE_CUTOFF, K1, B, SearchEngine, _check_k,
-                   _query_terms, _TermCursor, get_engine,
-                   match_scores_arrays)
+                   _query_terms, _TermCursor, drop_tombstoned,
+                   get_engine, match_scores_arrays)
 
 MODES = ("best_fields", "most_fields")
 
@@ -328,11 +328,7 @@ def multi_match_df(engines: dict[str, SearchEngine],
     tombs = set()
     for eng in engines.values():
         tombs |= eng.tombstones
-    if tombs:
-        first = next(iter(engines.values()))
-        ts = first.spark.createDataFrame(
-            [(int(d),) for d in sorted(tombs)], "doc_id long")
-        u = u.join(F.broadcast(ts), "doc_id", "left_anti")
+    u = drop_tombstoned(u, tombs)
     per_doc = (u.groupBy("doc_id")
                .agg(F.sort_array(F.collect_list(F.struct("fi", "score")))
                     .alias("fs")))

@@ -53,7 +53,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .topk import (B, K1, SEGMENT_FANOUT_CUTOFF, SearchEngine,
-                   _block_arrays, get_engine, phrase_topk_arrays)
+                   _block_arrays, drop_tombstoned, get_engine,
+                   phrase_topk_arrays)
 from ..functions.analysis import analyze_search
 from ..functions.encode import decode_blocks_into
 
@@ -379,10 +380,7 @@ def terms_set_topk(spark: SparkSession, index_dir: str,
     fields = read_fields(eng.cat, eng.spark).select(
         "doc_id", F.col(sub).alias("_msm"))
     flat = read_flat(eng.cat, eng.spark).filter(F.col("term").isin(uniq))
-    if eng.tombstones:
-        ts = spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        flat = flat.join(F.broadcast(ts), "doc_id", "left_anti")
+    flat = drop_tombstoned(flat, eng)
     td = eng.cat.read(spark, "term_dict") \
         .filter(F.col("term").isin(uniq)).select("term", "idf")
     contrib = (F.col("idf") * F.col("tf") * (K1 + 1.0)
@@ -428,10 +426,7 @@ def simple_query_string_df(spark: SparkSession, index_dir: str,
             [], "doc_id long, url string, score double")
     flat = read_flat(eng.cat, eng.spark) \
         .filter(F.col("term").isin(all_terms))
-    if eng.tombstones:
-        ts = spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        flat = flat.join(F.broadcast(ts), "doc_id", "left_anti")
+    flat = drop_tombstoned(flat, eng)
     td = eng.cat.read(spark, "term_dict") \
         .filter(F.col("term").isin(scored)).select("term", "idf")
     scored_c = F.col("term").isin(scored)

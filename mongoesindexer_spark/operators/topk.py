@@ -304,6 +304,22 @@ def _query_terms(query_text: str, cfg: AnalyzerConfig) -> list[str]:
     return sorted(set(analyze_search(query_text, cfg)))
 
 
+def drop_tombstoned(df: DataFrame, tombstones) -> DataFrame:
+    """``df`` without its tombstoned doc_ids: the merge-on-read mask of
+    every Spark locus, a broadcast anti-join.  ``tombstones`` is a
+    :class:`SearchEngine` or a set of doc ids.  The mask is a local
+    relation built from pandas; a Python row list would go through
+    ``parallelize`` and a Python worker on every call."""
+    ids = getattr(tombstones, "tombstones", tombstones)
+    if not ids:
+        return df
+    ts = df.sparkSession.createDataFrame(
+        pd.DataFrame({"doc_id": np.sort(np.fromiter(ids, dtype=np.int64,
+                                                    count=len(ids)))}),
+        "doc_id long")
+    return df.join(F.broadcast(ts), "doc_id", "left_anti")
+
+
 # ---------------------------------------------------------------------------
 # Exhaustive DataFrame path (correctness spine; Catalyst does the pruning)
 # ---------------------------------------------------------------------------
@@ -500,10 +516,7 @@ class SearchEngine:
                 else:
                     keep = fsrc.filter(pred).select("doc_id")
                     flat = flat.join(keep, "doc_id", "semi")
-        if self.tombstones:
-            ts = self.spark.createDataFrame(
-                [(int(d),) for d in self.tombstones], "doc_id long")
-            flat = flat.join(F.broadcast(ts), "doc_id", "left_anti")
+        flat = drop_tombstoned(flat, self)
         td = self.cat.read(self.spark, "term_dict").filter(F.col("term").isin(terms))
         scored = (
             flat.join(F.broadcast(td.select("term", "idf")), "term")

@@ -19,9 +19,17 @@ import json
 import os
 import uuid
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from . import fsio
+
+
+def _driver_side(df) -> bool:
+    """True for a pyarrow Table or pandas frame (written on the driver),
+    False for a Spark DataFrame."""
+    return isinstance(df, (pa.Table, pd.DataFrame))
 
 
 class ParquetCatalog:
@@ -69,16 +77,27 @@ class ParquetCatalog:
         fsio.remove_dir(os.path.join(self.root, table), self.filesystem)
 
     # -- write -------------------------------------------------------------
-    def _write_snapshot(self, df: DataFrame, table: str) -> str:
+    def _write_snapshot(self, df, table: str) -> str:
         log = self._read_log(table)
         snap_id = (log[-1]["id"] + 1) if log else 1
         rel = f"snap-{snap_id:06d}-{uuid.uuid4().hex[:8]}"
         path = os.path.join(self.root, table, rel)
-        df.write.mode("overwrite").parquet(path)
+        if not _driver_side(df):
+            df.write.mode("overwrite").parquet(path)
+            return rel
+        # a driver-sized pyarrow Table or pandas frame: one file written
+        # by pyarrow, no Spark job
+        fsio.makedirs(path, self.filesystem)
+        t = df if isinstance(df, pa.Table) else pa.Table.from_pandas(
+            df, preserve_index=False)
+        fsio.write_parquet_atomic(
+            t, os.path.join(path, "part-00000.parquet"), self.filesystem)
         return rel
 
-    def append(self, df: DataFrame, table: str) -> int:
-        """Atomic append (Iceberg ``append()`` analog). Returns snapshot id."""
+    def append(self, df, table: str) -> int:
+        """Atomic append (Iceberg ``append()`` analog). Returns snapshot id.
+        ``df`` is a Spark DataFrame, or a driver-sized pyarrow Table or
+        pandas frame, which is written on the driver (no Spark job)."""
         rel = self._write_snapshot(df, table)
         log = self._read_log(table)
         snap_id = (log[-1]["id"] + 1) if log else 1
@@ -86,10 +105,11 @@ class ParquetCatalog:
         self._commit(table, log)
         return snap_id
 
-    def overwrite(self, df: DataFrame, table: str) -> int:
+    def overwrite(self, df, table: str) -> int:
         """Atomic replace (Iceberg ``overwritePartitions``/``replace``
         analog): new log points only at the new snapshot; old snapshot dirs
-        stay on disk for time travel until vacuumed."""
+        stay on disk for time travel until vacuumed.  ``df`` as in
+        :meth:`append`."""
         rel = self._write_snapshot(df, table)
         log = self._read_log(table)
         snap_id = (log[-1]["id"] + 1) if log else 1
@@ -98,27 +118,12 @@ class ParquetCatalog:
         return snap_id
 
     def write_small_arrow(self, pdf, table: str, op: str = "overwrite") -> int:
-        """Driver-side snapshot commit of a TINY table (global_stats,
-        sync_log — O(1) rows) via pyarrow, skipping Spark entirely: a
-        1-row DataFrame write costs a full job of scheduler latency, which
-        is pure serial overhead in every build/sync.  Corpus-sized tables
-        must use :meth:`overwrite`/:meth:`append`."""
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        log = self._read_log(table)
-        snap_id = (log[-1]["id"] + 1) if log else 1
-        rel = f"snap-{snap_id:06d}-{uuid.uuid4().hex[:8]}"
-        path = os.path.join(self.root, table, rel)
-        fsio.makedirs(path, self.filesystem)
-        t = pdf if isinstance(pdf, pa.Table) else pa.Table.from_pandas(
-            pdf, preserve_index=False)
-        fsio.write_parquet_atomic(
-            t, os.path.join(path, "part-00000.parquet"), self.filesystem)
-        log.append({"id": snap_id, "dir": rel, "op": op})
-        self._commit(table, log)
-        return snap_id
+        """Driver-side snapshot commit of a small table (global_stats,
+        sync_log, a sync batch's rows) via pyarrow, skipping Spark
+        entirely: a small DataFrame write costs a full job of scheduler
+        latency, which is pure serial overhead in every build/sync.
+        Corpus-sized tables must be written from a Spark DataFrame."""
+        return (self.append if op == "append" else self.overwrite)(pdf, table)
 
     def register_external(self, path: str, table: str, op: str = "overwrite") -> int:
         """Adopt an existing parquet directory as a snapshot without
@@ -243,21 +248,23 @@ class IcebergCatalog:
         self.spark.sql(f"DROP TABLE IF EXISTS {self._tbl(table)}")
 
     # -- write -------------------------------------------------------------
-    def append(self, df: DataFrame, table: str) -> int:
+    def append(self, df, table: str) -> int:
+        if _driver_side(df):
+            df = self.spark.createDataFrame(df)
         if self.table_exists(table):
             df.writeTo(self._tbl(table)).append()
         else:
             df.writeTo(self._tbl(table)).using("iceberg").create()
         return self.current_snapshot(table)
 
-    def overwrite(self, df: DataFrame, table: str) -> int:
+    def overwrite(self, df, table: str) -> int:
+        if _driver_side(df):
+            df = self.spark.createDataFrame(df)
         df.writeTo(self._tbl(table)).using("iceberg").createOrReplace()
         return self.current_snapshot(table)
 
     def write_small_arrow(self, pdf, table: str, op: str = "overwrite") -> int:
-        df = self.spark.createDataFrame(pdf)
-        return self.append(df, table) if op == "append" else \
-            self.overwrite(df, table)
+        return (self.append if op == "append" else self.overwrite)(pdf, table)
 
     def register_external(self, path: str, table: str,
                           op: str = "overwrite") -> int:
@@ -327,8 +334,6 @@ def read_table_arrow(cat: ParquetCatalog, table: str,
     fetches) where per-job scheduling latency would dominate; corpus-sized
     tables stay on the Spark read path.  Returns a pandas DataFrame.
     """
-    import pandas as pd
-
     # through the seam only (data_files + filesystem — both served by
     # IcebergCatalog too), and through the catalog's filesystem: a remote
     # index root's driver-side reads must not hit the driver's local disk

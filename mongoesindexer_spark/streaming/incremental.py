@@ -22,6 +22,17 @@ snapshot id is the resume token — and applies it as a delta segment:
 Update = delete + insert, the same contract as the reference's indexOne
 upsert-by-_id (load.service.ts:274-309).
 
+Locus.  The reference syncs in small batches: its cron poll takes 20 new
+and 50 stale docs per tick and its change stream indexes one event at a
+time, and ES applies such a batch as a small in-memory segment flush, not
+as a cluster job.  So a batch of at most ``LOCAL_APPLY_MAX_ROWS`` rows
+(after the per-url collapse) is applied on the driver with the build's
+own kernels (extract, tokenize, encode, sub-fields) and driver-side
+pyarrow commits; a larger batch (a backfill) runs as Spark jobs.  Both
+loci make the same commits in the same order and share the vocab-sized
+``term_dict`` / ``completion`` rewrite, which is the only Spark work left
+on the driver locus.
+
 At-least-once safety: applying the same batch twice is detected via the
 ``sync_log`` table (batch_id) — the analog of the reference's
 resume_tokens index (load.service.ts:55-69).
@@ -29,13 +40,32 @@ resume_tokens index (load.service.ts:55-69).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.analysis import LTD_DOC, AnalyzerConfig
 from ..operators.build_index import (IndexBuilder, assign_doc_ids,
                                      check_format_version, resolve_text,
-                                     tokenize_flat)
+                                     tokenize_flat, write_term_dict)
+from ..sources.catalog import read_table_arrow
+
+# Change batches of at most this many rows (after the per-url collapse)
+# are applied on the driver; larger ones by Spark jobs.  Measured on a
+# 4-vCPU host with ~0.8 kB pages (tests' tiny fixture): the driver locus
+# costs 0.2-0.3 ms per row (extract + tokenize + encode + commits), the
+# Spark locus ~7-8 s of job latency for 45 to 4,000 rows alike.  Memory
+# bound: the collected rows (html + text) and their postings sit in
+# driver memory at once, about 1,024 x the page size (~100 MB at 100 kB
+# pages).
+LOCAL_APPLY_MAX_ROWS = 1024
+
+# the page columns every change row carries (besides op)
+PAGE_COLS = ("url", "warc_ts", "html", "text", "lang")
+_DOC_STATS_SCHEMA = pa.schema([("doc_id", pa.int64()), ("url", pa.string()),
+                               ("doc_len", pa.int64())])
 
 # Fields the reference always treats as its own bookkeeping writebacks
 # (array-utils.ts:7: lastESIndexedAt / lastESIndexResponse).  Engine analog:
@@ -210,21 +240,34 @@ class IncrementalIndexer:
         # (e.g. a poll loop moving on to the next batch).  sync_log is the
         # witness: committed batch_id present ⇒ just retire the journal.
         bid = j.get("batch_id")
-        if bid and self.cat.table_exists("sync_log"):
-            seen = {r["batch_id"] for r in
-                    self.cat.read(spark, "sync_log").collect()}
-            if bid in seen:
-                fsio.remove_file(p, self.filesystem)
-                return None
+        if bid and bid in self._logged_batches():
+            fsio.remove_file(p, self.filesystem)
+            return None
         for t, sid in j["pre"].items():
             self.cat.rollback(t, int(sid))
         fsio.remove_file(p, self.filesystem)
         return j
 
+    def _logged_batches(self) -> set:
+        """batch_ids in ``sync_log`` (a driver-side read, no Spark job)."""
+        if not self.cat.table_exists("sync_log"):
+            return set()
+        return set(read_table_arrow(self.cat, "sync_log")["batch_id"])
+
     def apply_updates(self, spark: SparkSession, updates: DataFrame,
                       batch_id: str | None = None) -> dict:
         """Apply one change batch. ``updates`` columns: op (insert/update/
-        delete), url, warc_ts, html, text, lang [, changed_fields]."""
+        delete), url, warc_ts, html, text, lang [, changed_fields].
+
+        Locus: after the shared prep (format check, recovery, self-update
+        filter, op check, per-url collapse, duplicate-batch check) the
+        batch is collected with ``limit(LOCAL_APPLY_MAX_ROWS + 1)``.  A
+        batch of at most ``LOCAL_APPLY_MAX_ROWS`` rows is applied on the
+        driver (:meth:`_apply_on_driver`); a larger one by Spark jobs
+        (:meth:`_apply_on_spark`).  Both use the build's kernels and make
+        the same table commits in the same order, journal first and
+        ``sync_log`` last; only the vocab-sized ``term_dict`` and
+        ``completion`` rewrites run as Spark jobs on both."""
         # syncing a stale-format index would append mixed-schema blocks;
         # fail loudly instead (rebuild via IndexBuilder.build)
         check_format_version(self.index_dir, "incremental-sync target",
@@ -273,17 +316,20 @@ class IncrementalIndexer:
             F.md5(F.coalesce(F.col("text"), F.lit(""))))
         updates = updates.withColumn("_rn", F.row_number().over(w)) \
             .filter(F.col("_rn") == 1).drop("_rn")
-        if batch_id and self.cat.table_exists("sync_log"):
-            seen = {r["batch_id"] for r in
-                    self.cat.read(spark, "sync_log").collect()}
-            if batch_id in seen:
-                return {"applied": False, "reason": "duplicate batch"}
+        if batch_id and batch_id in self._logged_batches():
+            return {"applied": False, "reason": "duplicate batch"}
+        # the one locus choice: a bounded collect (a small batch's whole
+        # payload; a larger one is only probed here and re-read by Spark)
+        head = updates.limit(LOCAL_APPLY_MAX_ROWS + 1).toArrow()
+        on_driver = head.num_rows <= LOCAL_APPLY_MAX_ROWS
 
         # intent journal: pre-batch snapshot ids of every table this batch
         # may commit to — one atomic control-plane write.  sync_log lands
         # LAST below, so the journal existing without the matching
         # sync_log row is exactly the signature recover() reverses.
         import json as _json
+
+        import pandas as pd
 
         from ..sources import fsio
         fsio.write_text_atomic(
@@ -292,9 +338,55 @@ class IncrementalIndexer:
                                  for t in self._sync_tables()}}),
             self._journal_path(), self.filesystem)
 
+        g = read_table_arrow(self.cat, "global_stats").iloc[0]
+        n_docs = int(g["n_docs"])
+        sum_dl = int(g["sum_dl"]) if pd.notna(g["sum_dl"]) else 0
+        if on_driver:
+            d = self._apply_on_driver(spark, head, n_docs, sum_dl)
+        else:
+            d = self._apply_on_spark(spark, updates, n_docs, sum_dl)
+        n_docs2 = n_docs - d.n_dead + d.n_new
+        sum_dl2 = sum_dl - d.dl_dead + d.dl_new
+        # term_dict exact delta update: the old dictionary plus the
+        # batch's df/cf deltas, summed per term; terms whose df falls to 0
+        # leave the dictionary
+        td = self.cat.read(spark, "term_dict").select("term", "df", "cf")
+        counts = (
+            td.unionByName(d.deltas.select(
+                "term", F.col("d_df").alias("df"), F.col("d_cf").alias("cf")))
+            .groupBy("term")
+            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+            .filter(F.col("df") > 0)
+        )
+        # completion derives from term_dict and is refreshed with it
+        # (vocab-sized — cheap next to the sync itself)
+        write_term_dict(self.cat, counts, n_docs2,
+                        spark.sparkContext.defaultParallelism
+                        if self.cat.table_exists("completion") else None)
+        self.cat.write_small_arrow(
+            pd.DataFrame({
+                "n_docs": pd.Series([n_docs2], dtype="int64"),
+                "avgdl": pd.Series([sum_dl2 / max(1, n_docs2)],
+                                   dtype="float64"),
+                "sum_dl": pd.Series([sum_dl2], dtype="int64")}),
+            "global_stats")
+        if batch_id:
+            self.cat.append(
+                pd.DataFrame({"batch_id": pd.Series([batch_id],
+                                                    dtype="object")}),
+                "sync_log")
+        # all commits landed (sync_log included) — retire the intent journal
+        fsio.remove_file(self._journal_path(), self.filesystem)
+        for h in d.release:
+            h.unpersist()
+        return {"applied": True, "inserted": d.n_new,
+                "tombstoned": d.n_dead, "n_docs": n_docs2}
+
+    def _apply_on_spark(self, spark: SparkSession, updates: DataFrame,
+                        n_docs: int, sum_dl: int) -> "_Delta":
+        """The Spark locus: a batch above ``LOCAL_APPLY_MAX_ROWS`` (a
+        backfill) never reaches the driver; only scalar aggregates do."""
         stats = self.cat.read(spark, "doc_stats")
-        g = self.cat.read(spark, "global_stats").collect()[0]
-        n_docs, sum_dl = int(g["n_docs"]), int(g["sum_dl"] or 0)
 
         # upsert semantics (reference indexOne indexes by _id — an ES upsert,
         # load.service.ts:274-309): ANY incoming url retires an existing doc
@@ -325,10 +417,9 @@ class IncrementalIndexer:
         # keep EVERY payload column, not just the page shape: the fields
         # refresh below recovers keyword/numeric sub-field base columns
         # (e.g. an integer range-filter field) from the update rows
-        page_cols = ["url", "warc_ts", "html", "text", "lang"]
-        extra = [c for c in updates.columns if c not in page_cols + ["op"]]
+        extra = [c for c in updates.columns if c not in PAGE_COLS + ("op",)]
         new_pages = updates.filter(F.col("op").isin("insert", "update")) \
-            .select(*page_cols, *extra)
+            .select(*PAGE_COLS, *extra)
         max_id = stats.agg(F.max("doc_id")).collect()[0][0]
         base_id = int(max_id if max_id is not None else -1) + 1
         # deterministic dense numbering above base_id via the same
@@ -355,30 +446,18 @@ class IncrementalIndexer:
             F.coalesce(F.sum("doc_len"), F.lit(0)).alias("dl")).collect()[0]
         n_new, dl_new = int(ng["n"]), int(ng["dl"])
 
-        # --- term_dict exact delta update ---------------------------------
-        n_docs2 = n_docs - n_dead + n_new
-        dead_delta = None
+        # df/cf deltas: the new postings add, the dead docs' own postings
+        # subtract
+        deltas = delta_flat.groupBy("term").agg(
+            F.count("*").alias("d_df"), F.sum("tf").alias("d_cf"))
         if n_dead:
             from ..operators.build_index import read_flat
-            dead_delta = (
+            deltas = deltas.unionByName(
                 read_flat(self.cat, spark)
                 .join(dead.select("doc_id"), "doc_id", "inner")
                 .groupBy("term")
-                .agg((-F.count("*")).alias("d_df"), (-F.sum("tf")).alias("d_cf"))
-            )
-        add_delta = delta_flat.groupBy("term").agg(
-            F.count("*").alias("d_df"), F.sum("tf").alias("d_cf"))
-        deltas = add_delta if dead_delta is None else add_delta.unionByName(dead_delta)
-        td = self.cat.read(spark, "term_dict").select("term", "df", "cf")
-        td2 = (
-            td.unionByName(deltas.select("term", F.col("d_df").alias("df"),
-                                         F.col("d_cf").alias("cf")))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-            .filter(F.col("df") > 0)
-            .withColumn("idf", F.log(F.lit(1.0) + (F.lit(float(n_docs2)) - F.col("df") + 0.5)
-                                     / (F.col("df") + 0.5)))
-        )
+                .agg((-F.count("*")).alias("d_df"),
+                     (-F.sum("tf")).alias("d_cf")))
 
         # --- append flat rows, then encode the delta segment from the
         # written part files (new doc range ⇒ blocks disjoint from base).
@@ -387,7 +466,7 @@ class IncrementalIndexer:
         # needs NO shuffle at any batch size, where the former
         # groupBy(hash(term)) put a backfill batch's head terms each on a
         # single task (the skew the build's encode stage exists to avoid)
-        avgdl2 = (sum_dl - dl_dead + dl_new) / max(1, n_docs2)
+        avgdl2 = (sum_dl - dl_dead + dl_new) / max(1, n_docs - n_dead + n_new)
         snap = self.cat.append(delta_all, "postings_flat")
         self._encode_delta(
             spark, self.cat.snapshot_dir("postings_flat", snap), avgdl2)
@@ -401,11 +480,8 @@ class IncrementalIndexer:
             # column the sync payload lacks stays null for delta docs.
             from ..operators.build_index import (fields_subfields,
                                                  write_keyword_sidecars)
-            fcols_all = self.cat.read(spark, "fields").columns
-            f_cols = sorted(c[:-len("_keyword")] for c in fcols_all
-                            if c.endswith("_keyword"))
-            n_cols = sorted(c[:-len("_num")] for c in fcols_all
-                            if c.endswith("_num"))
+            f_cols, n_cols = _subfield_bases(
+                self.cat.read(spark, "fields").columns)
             src = new_pages
             for c in f_cols:
                 if c not in src.columns:
@@ -425,43 +501,159 @@ class IncrementalIndexer:
             write_keyword_sidecars(self.cat, fdf, 1, append=True)
         if n_dead:
             self.cat.append(dead.select("doc_id"), "tombstones")
-        self.cat.overwrite(td2, "term_dict")
-        if self.cat.table_exists("completion"):
-            # completion derives from term_dict; refresh it from the new
-            # dictionary (vocab-sized — cheap next to the sync itself)
-            from ..operators.build_index import completion_from_term_dict
-            self.cat.overwrite(
-                completion_from_term_dict(
-                    self.cat.read(spark, "term_dict"),
-                    spark.sparkContext.defaultParallelism),
-                "completion")
+        return _Delta(n_dead, dl_dead, n_new, dl_new, deltas,
+                      (delta_all, dead))
+
+    def _apply_on_driver(self, spark: SparkSession, batch, n_docs: int,
+                         sum_dl: int) -> "_Delta":
+        """The driver locus: the collected batch (a ``pyarrow.Table``) is
+        applied with the build's kernels — ``extract_text``,
+        ``_tokenize_batch``, ``encode_flat_file`` and
+        ``normalize_keywords`` — and committed with driver-side pyarrow
+        writes.  Index reads are footer-pruned point reads: dead docs by
+        url from ``doc_stats``, their postings by doc_id from
+        ``postings_flat``; the max doc_id comes from footer stats.  Doc
+        ids and rows equal the Spark locus's: ids are max doc_id + 1 +
+        the url rank within the batch, as ``assign_doc_ids`` numbers
+        them."""
+        import numpy as np
         import pandas as pd
-        self.cat.write_small_arrow(
-            pd.DataFrame({
-                "n_docs": pd.Series([n_docs2], dtype="int64"),
-                "avgdl": pd.Series([float(avgdl2)], dtype="float64"),
-                "sum_dl": pd.Series([int(sum_dl - dl_dead + dl_new)],
-                                    dtype="int64")}),
-            "global_stats")
-        if batch_id:
-            self.cat.write_small_arrow(
-                pd.DataFrame({"batch_id": pd.Series([batch_id],
-                                                    dtype="object")}),
-                "sync_log", op="append")
-        # all commits landed (sync_log included) — retire the intent journal
-        fsio.remove_file(self._journal_path(), self.filesystem)
-        delta_all.unpersist()
-        dead.unpersist()
-        return {"applied": True, "inserted": n_new, "tombstoned": n_dead,
-                "n_docs": n_docs2}
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from ..functions.analysis import extract_text
+        from ..operators.build_index import FLAT_SCHEMA, _tokenize_batch
+        from ..operators.topk import _RowGroupIndex
+
+        cat, fs = self.cat, self.filesystem
+
+        def point_read(table: str, key: str, values, columns):
+            idx = _RowGroupIndex(cat.data_files(table), key, fs)
+            try:
+                return idx.read_isin_table(values, columns)
+            finally:
+                idx.close()
+
+        # --- dead docs: live doc_stats rows of any incoming url (upsert
+        # semantics, as on the Spark locus)
+        dead = point_read("doc_stats", "url",
+                          batch.column("url").to_pylist(),
+                          ["doc_id", "doc_len"])
+        dead_ids = dead.column("doc_id").to_numpy()
+        if cat.table_exists("tombstones") and dead_ids.size:
+            tomb = read_table_arrow(cat, "tombstones")["doc_id"]
+            keep = ~np.isin(dead_ids, tomb.to_numpy(dtype=np.int64))
+            dead_ids = dead_ids[keep]
+            dead = dead.filter(pa.array(keep))
+        n_dead = int(dead_ids.size)
+        dl_dead = int(pc.sum(dead.column("doc_len")).as_py() or 0)
+
+        # --- new docs: fresh ids in url order above the max doc_id
+        new = batch.filter(pc.is_in(batch.column("op"),
+                                    pa.array(["insert", "update"])))
+        new = new.sort_by("url")
+        max_id = _column_max(cat, "doc_stats", "doc_id", fs)
+        base_id = int(max_id if max_id is not None else -1) + 1
+        doc_ids = np.arange(base_id, base_id + new.num_rows, dtype=np.int64)
+        urls = new.column("url").to_pylist()
+        texts = [t if t is not None else
+                 extract_text(h) if isinstance(h, (str, bytes, bytearray))
+                 else None
+                 for t, h in zip(new.column("text").to_pylist(),
+                                 new.column("html").to_pylist())]
+        flat = _tokenize_batch(doc_ids, urls, texts, self.cfg,
+                               positions=self.positions)
+        is_post = flat["term"].notna().to_numpy()
+        markers = flat.loc[~is_post, ["doc_id", "url", "doc_len"]]
+        n_new, dl_new = len(markers), int(markers["doc_len"].sum())
+
+        # --- df/cf deltas: the batch's postings add, the dead docs' own
+        # postings (a doc_id point read of postings_flat) subtract
+        parts = [flat.loc[is_post].groupby("term", sort=False)["tf"]
+                 .agg(d_df="size", d_cf="sum")]
+        if n_dead:
+            gone = point_read("postings_flat", "doc_id", dead_ids.tolist(),
+                              ["term", "tf"]).to_pandas()
+            gone = gone[gone["term"].notna()].groupby("term", sort=False)
+            parts.append(-gone["tf"].agg(d_df="size", d_cf="sum"))
+        deltas = pd.concat(parts).reset_index()
+
+        # --- commits, in the Spark locus's order
+        if n_new:
+            snap = cat.append(
+                pa.Table.from_pandas(flat, schema=FLAT_SCHEMA,
+                                     preserve_index=False),
+                "postings_flat")
+            avgdl2 = (sum_dl - dl_dead + dl_new) / \
+                max(1, n_docs - n_dead + n_new)
+            self._encode_delta(spark, cat.snapshot_dir("postings_flat", snap),
+                               avgdl2, on_driver=True)
+            cat.append(
+                pa.Table.from_pandas(markers, schema=_DOC_STATS_SCHEMA,
+                                     preserve_index=False),
+                "doc_stats")
+            if cat.table_exists("fields"):
+                self._append_fields_on_driver(spark, new, doc_ids)
+        if n_dead:
+            cat.append(
+                pa.table({"doc_id": pa.array(dead_ids, pa.int64())}),
+                "tombstones")
+        return _Delta(n_dead, dl_dead, n_new, dl_new,
+                      spark.createDataFrame(
+                          deltas, "term string, d_df long, d_cf long"), ())
+
+    def _append_fields_on_driver(self, spark: SparkSession, new,
+                                 doc_ids) -> None:
+        """Append the new docs' ``fields`` rows and one value-sorted
+        generation of each ``fields_by_*`` sidecar, as
+        :func:`fields_subfields` and :func:`write_keyword_sidecars` would.
+        The base columns are cast by Spark over a local relation (no job),
+        so the cast semantics are Spark's on both loci."""
+        import pandas as pd
+
+        from ..operators.build_index import normalize_keywords, sidecar_table
+        from ..sources import fsio
+
+        cat = self.cat
+        with fsio.parquet_file(cat.data_files("fields")[0],
+                               self.filesystem) as f:
+            fschema = f.schema_arrow
+        f_cols, n_cols = _subfield_bases(fschema.names)
+        keyed = new.select([c for c in sorted(set(f_cols) | set(n_cols))
+                            if c in new.column_names]) \
+            .append_column("doc_id", pa.array(doc_ids, pa.int64()))
+
+        def base(c: str, typ: str):
+            col = F.col(c) if c in keyed.column_names else F.lit(None)
+            return col.cast(typ)
+
+        out = [f"{c}_keyword" for c in f_cols] + [f"{c}_num" for c in n_cols]
+        rows = spark.createDataFrame(keyed).select(
+            "doc_id",
+            *[base(c, "string").alias(f"{c}_keyword") for c in f_cols],
+            *[base(c, "long").alias(f"{c}_num") for c in n_cols]).collect()
+        vals = {n: [r[n] for r in rows] for n in ["doc_id", *out]}
+        for c in f_cols:
+            vals[f"{c}_normalized"] = normalize_keywords(
+                pd.Series(vals[f"{c}_keyword"], dtype=object)).tolist()
+        fields = pa.table({n: pa.array(vals[n], fschema.field(n).type)
+                           for n in fschema.names})
+        cat.append(fields, "fields")
+        for sub in fschema.names:
+            if sub == "doc_id" or sub.endswith("_num"):
+                continue
+            side = fields.select([sub, "doc_id"]).drop_null() \
+                .sort_by([(sub, "ascending"), ("doc_id", "ascending")])
+            cat.append(side, sidecar_table(sub))
 
     def _encode_delta(self, spark: SparkSession, delta_dir: str,
-                      avgdl: float) -> None:
+                      avgdl: float, on_driver: bool = False) -> None:
         """Encode the just-appended delta flat part files as new block
-        segment files — one task per file, no shuffle (files are
-        doc-range disjoint; see apply_updates).  Block ids continue above
-        every existing block id so (term, block_id) order remains the
-        doc order across generations."""
+        segment files with ``encode_flat_file`` — one Spark task per file,
+        no shuffle (files are doc-range disjoint; see apply_updates), or
+        in the driver process for ``on_driver``.  Block ids continue above
+        every existing block id (from footer stats) so (term, block_id)
+        order remains the doc order across generations."""
         import os
         import uuid as _uuid
 
@@ -479,32 +671,81 @@ class IncrementalIndexer:
         files = source_files_presorted(paths, key="doc_id", filesystem=fs)
         if not files:
             return
-        # metadata-column aggregate (one small job) keeps block ids
-        # globally unique across base + every delta generation
-        max_block = self.cat.read(spark, "postings_blocks") \
-            .agg(F.max("block_id")).collect()[0][0] or 0
-        block_base = int(max_block) + 1
+        block_base = int(_column_max(self.cat, "postings_blocks",
+                                     "block_id", fs) or 0) + 1
         gen = _uuid.uuid4().hex[:8]
         seg_dir = os.path.join(self.index_dir, "segments", f"delta-{gen}")
         fsio.makedirs(seg_dir, fs)
         todo = [(p, block_base + off, i) for i, (p, off) in enumerate(files)]
 
-        def _enc(it):
-            for pdf in it:
-                for path, base, idx in zip(pdf["path"].values,
-                                           pdf["base"].values,
-                                           pdf["idx"].values):
-                    n_rows, n_blocks = encode_flat_file(
-                        path,
-                        os.path.join(seg_dir, f"seg-d{int(idx):06d}.parquet"),
-                        avgdl, bs, int(base), filesystem=fs)
-                    yield pd.DataFrame({"partition": [int(idx)],
-                                        "rows": [n_rows],
-                                        "blocks": [n_blocks]})
+        def _seg_path(idx) -> str:
+            return os.path.join(seg_dir, f"seg-d{int(idx):06d}.parquet")
 
-        fdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(todo, len(todo)),
-            "path string, base long, idx long")
-        fdf.mapInPandas(
-            _enc, schema="partition long, rows long, blocks long").collect()
+        if on_driver:
+            for path, base, idx in todo:
+                encode_flat_file(path, _seg_path(idx), avgdl, bs, base,
+                                 filesystem=fs)
+        else:
+            def _enc(it):
+                for pdf in it:
+                    for path, base, idx in zip(pdf["path"].values,
+                                               pdf["base"].values,
+                                               pdf["idx"].values):
+                        n_rows, n_blocks = encode_flat_file(
+                            path, _seg_path(idx), avgdl, bs, int(base),
+                            filesystem=fs)
+                        yield pd.DataFrame({"partition": [int(idx)],
+                                            "rows": [n_rows],
+                                            "blocks": [n_blocks]})
+
+            fdf = spark.createDataFrame(
+                spark.sparkContext.parallelize(todo, len(todo)),
+                "path string, base long, idx long")
+            fdf.mapInPandas(
+                _enc, schema="partition long, rows long, blocks long"
+            ).collect()
         self.cat.register_external(seg_dir, "postings_blocks", op="append")
+
+
+class _Delta(NamedTuple):
+    """What a locus hands back to :meth:`IncrementalIndexer.apply_updates`
+    for the shared term_dict / global_stats / sync_log commits."""
+    n_dead: int
+    dl_dead: int
+    n_new: int
+    dl_new: int
+    deltas: DataFrame        # (term, d_df, d_cf)
+    release: tuple           # frames to unpersist after the last commit
+
+
+def _subfield_bases(columns) -> tuple[list[str], list[str]]:
+    """(keyword bases, numeric bases) of a ``fields`` table's columns."""
+    return (sorted(c[:-len("_keyword")] for c in columns
+                   if c.endswith("_keyword")),
+            sorted(c[:-len("_num")] for c in columns if c.endswith("_num")))
+
+
+def _column_max(cat, table: str, col: str, filesystem=None):
+    """Max of ``col`` over a table's live files, from parquet footer
+    stats (a row group without stats is read) — no Spark job."""
+    import pyarrow.compute as pc
+
+    from ..sources import fsio
+    best = None
+    for path in cat.data_files(table):
+        f = fsio.parquet_file(path, filesystem)
+        try:
+            md = f.metadata
+            ci = f.schema_arrow.get_field_index(col)
+            for rg in range(md.num_row_groups):
+                if not md.row_group(rg).num_rows:
+                    continue
+                st = md.row_group(rg).column(ci).statistics
+                v = st.max if st is not None and st.has_min_max else \
+                    pc.max(f.read_row_group(rg, columns=[col])
+                           .column(col)).as_py()
+                if v is not None and (best is None or v > best):
+                    best = v
+        finally:
+            f.close()
+    return best

@@ -52,3 +52,16 @@ def tiny_index(spark, tiny_dir, tmp_path_factory):
     builder = IndexBuilder(index_dir, n_buckets=8, block_size=32)
     builder.build(spark, pages)
     return index_dir
+
+
+@pytest.fixture(scope="session")
+def tiny_index_pos(spark, tiny_dir, tmp_path_factory):
+    """Positional build on the tiny fixture (block_size small so phrases
+    cross block boundaries); shared by the phrase and sync-loci tests."""
+    from mongoesindexer_spark.operators.build_index import IndexBuilder
+
+    index_dir = str(tmp_path_factory.mktemp("idx-tiny-pos"))
+    pages = spark.read.parquet(os.path.join(tiny_dir, "pages.parquet"))
+    IndexBuilder(index_dir, n_buckets=8, block_size=32,
+                 index_positions=True).build(spark, pages)
+    return index_dir

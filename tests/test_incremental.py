@@ -291,18 +291,23 @@ def test_within_batch_duplicate_url_collapses(spark, tiny_index,
     assert eng.topk_wand("version", 10)["url"].tolist().count(url) == 1
 
 
+@pytest.mark.parametrize("locus", ["driver", "spark"])
 def test_crash_mid_sync_replays_cleanly(spark, tiny_index, tiny_dir,
-                                        tmp_path_factory):
+                                        tmp_path_factory, monkeypatch, locus):
     """apply_updates commits to many tables with no cross-table
     transaction; the intent journal must roll a half-committed batch back
     on replay so doc_ids are not reused and postings are not
     double-registered (VERDICT r2 'What's wrong': replayed batch reuses
-    the same doc_ids and double-counts scores)."""
+    the same doc_ids and double-counts scores).  Run on both sync loci
+    (the Spark one by a cutoff of 0)."""
     import pandas as pd
 
     from mongoesindexer_spark.sources.catalog import ParquetCatalog
+    from mongoesindexer_spark.streaming import incremental
     from mongoesindexer_spark.streaming.incremental import IncrementalIndexer
 
+    if locus == "spark":
+        monkeypatch.setattr(incremental, "LOCAL_APPLY_MAX_ROWS", 0)
     upd = spark.read.parquet(os.path.join(tiny_dir, "pages_updates.parquet"))
 
     # clean twin: same batch applied without a crash

@@ -29,17 +29,6 @@ from mongoesindexer_spark.operators.topk import bm25_phrase_topk, get_engine
 from tests.oracle import OracleIndex
 
 
-@pytest.fixture(scope="module")
-def tiny_index_pos(spark, tiny_dir, tmp_path_factory):
-    """Positional build on the tiny fixture (block_size small so phrases
-    cross block boundaries)."""
-    index_dir = str(tmp_path_factory.mktemp("idx-tiny-pos"))
-    pages = spark.read.parquet(os.path.join(tiny_dir, "pages.parquet"))
-    IndexBuilder(index_dir, n_buckets=8, block_size=32,
-                 index_positions=True).build(spark, pages)
-    return index_dir
-
-
 def _phrases_from_corpus(oracle: OracleIndex, tiny_pages, n: int = 12):
     """Bigrams + trigrams that actually occur in the corpus, plus a few
     that cannot match."""

@@ -64,13 +64,20 @@ def test_vacuum_reclaims_dead_snapshots(spark, tiny_index, tiny_dir,
     assert res2["removed_dirs"] == 0 and res2["expired_snapshots"] == 0
 
 
+@pytest.mark.parametrize("locus", ["driver", "spark"])
 def test_vacuum_heals_crashed_sync_before_expiry(spark, tiny_index,
-                                                 tiny_dir, tmp_path_factory):
+                                                 tiny_dir, tmp_path_factory,
+                                                 monkeypatch, locus):
     """A pending intent journal means a half-committed batch: expiring
     snapshots first would destroy the pre-batch history the rollback
     targets.  Vacuum must recover, then reclaim — and the replayed batch
-    must still apply cleanly afterwards."""
+    must still apply cleanly afterwards.  Run on both sync loci (the
+    Spark one by a cutoff of 0)."""
+    from mongoesindexer_spark.streaming import incremental
     from mongoesindexer_spark.streaming.incremental import IncrementalIndexer
+
+    if locus == "spark":
+        monkeypatch.setattr(incremental, "LOCAL_APPLY_MAX_ROWS", 0)
 
     upd = spark.read.parquet(os.path.join(tiny_dir, "pages_updates.parquet"))
     clean = str(tmp_path_factory.mktemp("idx-vclean")) + "/idx"
