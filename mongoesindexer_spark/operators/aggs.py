@@ -4,8 +4,9 @@ An ES request body can carry ``query`` + ``aggs``; the aggregation runs
 over every matching doc (not the top-k page), per shard, and the
 coordinating node merges.  ES never launches a cluster job for a hit set
 a shard holds; this module picks its locus the same way, by the engine's
-one cost model (Σdf of the query terms vs ``SEGMENT_FANOUT_CUTOFF``,
-decided in :func:`_driver_hit_ids` and nowhere else):
+one cost model (:meth:`SearchEngine.plan`: Σdf of the query terms vs
+``SEGMENT_FANOUT_CUTOFF``), asked in :func:`_driver_hit_ids` and nowhere
+else in this module:
 
 - **driver, below the cutoff** — the tombstone-masked hit ids come from
   the decoded posting blocks the serving kernels use, and
@@ -799,26 +800,25 @@ def search_composite_agg(eng: SearchEngine, query_text: str,
 
 def _driver_hit_ids(eng: SearchEngine, terms: list[str], mode: str,
                     min_should_match: int | None) -> "object | None":
-    """The locus decision of every hit-set agg — the only
-    ``SEGMENT_FANOUT_CUTOFF`` check in this module.  When the query
-    terms' Σdf is below the cutoff (the engine's one cost model for what
-    may materialize on the driver), the hit-set doc_ids computed
-    DRIVER-SIDE from the decoded posting blocks — exactly the candidate
-    set the serving kernels decode — tombstone-masked, as an int64
-    array (empty for no live terms).  At or above it, None: the caller
-    takes the Spark locus."""
+    """The locus decision of every hit-set agg, asked of
+    :meth:`SearchEngine.plan` (the engine's one cost model for what may
+    materialize on the driver).  When the plan keeps the query on the
+    driver, the hit-set doc_ids computed DRIVER-SIDE from the decoded
+    posting blocks — exactly the candidate set the serving kernels
+    decode — tombstone-masked, as an int64 array (empty for no live
+    terms).  When it fans out, None: the caller takes the Spark
+    locus."""
     import numpy as np
 
-    from .topk import SEGMENT_FANOUT_CUTOFF, _block_arrays
+    from .topk import _block_arrays, live_mask
     from ..functions.encode import decode_blocks_into
     _check_msm(mode, min_should_match)
-    meta = eng._term_meta(terms)
-    live = [t for t in terms if meta.get(t) is not None]
-    if not live:
+    plan = eng.plan(terms)
+    if not plan.idf:
         return np.empty(0, dtype=np.int64)
-    if sum(meta[t][1] for t in live) >= SEGMENT_FANOUT_CUTOFF:
+    if plan.fan_out:
         return None
-    by_term = eng._term_blocks(live)
+    by_term = eng._term_blocks(list(plan.idf))
     decode_blocks_into([b for bl in by_term.values() for b in bl
                         if "_arrs" not in b])
     per_term = [np.concatenate([_block_arrays(b)[0] for b in bl])
@@ -829,8 +829,7 @@ def _driver_hit_ids(eng: SearchEngine, terms: list[str], mode: str,
     need = len(terms) if mode == "and" else (min_should_match or 1)
     ids = ids[counts >= need]
     if eng.tombstones:
-        ids = ids[~np.isin(ids, np.fromiter(eng.tombstones,
-                                            dtype=np.int64))]
+        ids = ids[live_mask(ids, eng)]
     return ids.astype(np.int64)
 
 

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..functions.encode import decode_blocks_into
 from .multi_match import multi_match_topk
 from .topk import (SearchEngine, _check_k, _query_terms, drop_tombstoned,
-                   get_engine, match_scores_arrays)
+                   get_engine, live_mask, match_scores_arrays)
 
 
 def dis_max_topk(spark: SparkSession, index_dirs: dict[str, str],
@@ -69,10 +69,8 @@ def dis_max_topk(spark: SparkSession, index_dirs: dict[str, str],
 def _match_docs_kernel(eng: SearchEngine, query_text: str) -> np.ndarray:
     """Sorted doc_ids matching ≥1 query term — the kernel-side match set
     (block point reads, cost ∝ Σdf of the query's terms)."""
-    terms = _query_terms(query_text, eng.cfg)
-    meta = eng._term_meta(terms)
-    terms = [t for t in terms if meta.get(t) is not None]
-    by_term = eng._term_blocks(terms)
+    by_term = eng._term_blocks(list(eng.plan(
+        _query_terms(query_text, eng.cfg)).idf))
     blocks = [b for bl in by_term.values() for b in bl]
     decode_blocks_into([b for b in blocks if "_arrs" not in b])
     if not blocks:
@@ -104,18 +102,15 @@ def boosting_topk(spark: SparkSession, index_dir: str, positive: str,
                             negative_boost).toPandas()
     if locus != "kernel":
         raise ValueError("locus must be 'kernel' or 'spark'")
-    terms = _query_terms(positive, eng.cfg)
-    meta = eng._term_meta(terms)
-    td = {t: m[0] for t, m in meta.items() if m is not None}
-    terms = [t for t in terms if t in td]
-    by_term = eng._term_blocks(terms)
+    td = eng.plan(_query_terms(positive, eng.cfg)).idf
+    by_term = eng._term_blocks(list(td))
     decode_blocks_into([b for bl in by_term.values() for b in bl
                         if "_arrs" not in b])
     uniq, bm25, _ = match_scores_arrays(
-        {t: (td[t], by_term[t]) for t in terms if t in by_term},
+        {t: (td[t], by_term[t]) for t in td if t in by_term},
         eng.avgdl, need_counts=False)
     if uniq.size and eng.tombstones:
-        keep = ~np.isin(uniq, np.fromiter(eng.tombstones, dtype=np.int64))
+        keep = live_mask(uniq, eng)
         uniq, bm25 = uniq[keep], bm25[keep]
     if uniq.size == 0:
         return eng.hits_frame([])

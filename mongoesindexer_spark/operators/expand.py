@@ -39,7 +39,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from .topk import SearchEngine, get_engine
+from .topk import SearchEngine, get_engine, live_mask
 
 MAX_EXPANSIONS = 50
 _HI = chr(0x10FFFF)
@@ -283,8 +283,7 @@ def _terms_doc_set(eng: SearchEngine, terms: list[str]) -> pd.DataFrame:
         return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
     docs = np.unique(np.concatenate(arrs))
     if eng.tombstones:
-        docs = docs[~np.isin(docs, np.fromiter(eng.tombstones,
-                                               dtype=np.int64))]
+        docs = docs[live_mask(docs, eng)]
     return pd.DataFrame({"doc_id": docs.astype(np.int64)})
 
 

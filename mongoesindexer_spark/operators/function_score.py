@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .topk import SearchEngine, _query_terms, drop_tombstoned, \
-    get_engine, match_scores_arrays
+    get_engine, live_mask, match_scores_arrays
 
 MODIFIERS = ("none", "log1p", "sqrt")
 BOOST_MODES = ("multiply", "sum")
@@ -72,19 +72,16 @@ def _kernel_candidates(eng: SearchEngine, query_text: str
     """(doc_ids, bm25 scores) for every live candidate of the query —
     the vectorized score-all pass shared by the rescoring entry points
     (cost ∝ the query terms' Σdf, never the corpus)."""
-    terms = _query_terms(query_text, eng.cfg)
-    meta = eng._term_meta(terms)
-    td = {t: m[0] for t, m in meta.items() if m is not None}
-    terms = [t for t in terms if t in td]
-    by_term = eng._term_blocks(terms)
+    td = eng.plan(_query_terms(query_text, eng.cfg)).idf
+    by_term = eng._term_blocks(list(td))
     from ..functions.encode import decode_blocks_into
     decode_blocks_into([b for bl in by_term.values() for b in bl
                         if "_arrs" not in b])
     uniq, bm25, _ = match_scores_arrays(
-        {t: (td[t], by_term[t]) for t in terms if t in by_term},
+        {t: (td[t], by_term[t]) for t in td if t in by_term},
         eng.avgdl, need_counts=False)
     if uniq.size and eng.tombstones:
-        keep = ~np.isin(uniq, np.fromiter(eng.tombstones, dtype=np.int64))
+        keep = live_mask(uniq, eng)
         uniq, bm25 = uniq[keep], bm25[keep]
     return uniq, bm25
 

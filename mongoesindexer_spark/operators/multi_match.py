@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 from ..functions.encode import decode_blocks_into
 from .topk import (EXHAUSTIVE_CUTOFF, K1, B, SearchEngine, _check_k,
                    _query_terms, _TermCursor, drop_tombstoned,
-                   get_engine, match_scores_arrays)
+                   get_engine, live_mask, match_scores_arrays)
 
 MODES = ("best_fields", "most_fields")
 
@@ -129,12 +129,9 @@ def _field_term_blocks(eng: SearchEngine, query_text: str, boost: float
     """One field's ``{term: (boost×idf, blocks)}`` for the query, using
     that field's analyzer — terms absent from the field's term_dict are
     dropped (they can score nowhere)."""
-    analyzed = _query_terms(query_text, eng.cfg)
-    meta = eng._term_meta(analyzed)
-    td = {t: m[0] * boost for t, m in meta.items() if m is not None}
-    terms = [t for t in analyzed if t in td]
-    by_term = eng._term_blocks(terms)
-    return {t: (td[t], by_term[t]) for t in terms if t in by_term}
+    idf = eng.plan(_query_terms(query_text, eng.cfg)).idf
+    by_term = eng._term_blocks(list(idf))
+    return {t: (idf[t] * boost, by_term[t]) for t in idf if t in by_term}
 
 
 def multimatch_exhaustive_arrays(field_blocks: list[tuple[dict, float]],
@@ -165,7 +162,7 @@ def multimatch_exhaustive_arrays(field_blocks: list[tuple[dict, float]],
             mat[np.searchsorted(union, d), f] = s
     score = combine_matrix(mat, mtype, tie_breaker)
     if tombstones:
-        keep = ~np.isin(union, np.fromiter(tombstones, dtype=np.int64))
+        keep = live_mask(union, tombstones)
         union, score = union[keep], score[keep]
     if union.size == 0:
         return []

@@ -33,12 +33,14 @@ Execution loci:
 - :func:`simple_query_string_topk` — the serving path: driver kernel
   over the decoded posting blocks (vectorized numpy, no Spark job),
   phrases via the positional phrase kernel restricted to the candidate
-  set.  Gated by the engine's one driver cost model: Σ df of every
-  referenced term must stay under SEGMENT_FANOUT_CUTOFF; above it,
-  term-only queries transparently fall back to the distributed locus,
-  phrase-bearing queries raise with the cutoff named (the fan-out
-  phrase kernel scores pure phrases, not mixed term+phrase sums — a
-  per-group mixed kernel is the documented extension point).
+  set.  Gated by the engine's one locus planner,
+  :meth:`SearchEngine.plan` over every referenced term: when it fans
+  out, term-only queries transparently fall back to the distributed
+  locus, phrase-bearing queries raise with the cutoff named (the
+  fan-out phrase kernel scores pure phrases, not mixed term+phrase sums
+  — a per-group mixed kernel is the documented extension point).
+  :func:`match_bool_prefix_topk` asks the same planner, with the prefix
+  expansions' df as ``extra_df``, and raises when it fans out.
 - :func:`simple_query_string_df` — the distributed locus (term clauses
   only): ONE term-pushed postings scan, one shuffled aggregation
   computing score, must-coverage and exclusion flags together —
@@ -52,9 +54,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .topk import (B, K1, SEGMENT_FANOUT_CUTOFF, SearchEngine,
-                   _block_arrays, drop_tombstoned, get_engine,
-                   phrase_topk_arrays)
+from .topk import (B, K1, SearchEngine, _block_arrays, drop_tombstoned,
+                   get_engine, live_mask, phrase_topk_arrays)
 from ..functions.analysis import analyze_search
 from ..functions.encode import decode_blocks_into
 
@@ -143,32 +144,30 @@ def simple_query_string_topk(spark: SparkSession, index_dir: str,
         raise ValueError(
             "quoted phrase clauses need an index built with "
             "index_positions=True")
-    meta = eng._term_meta(all_terms)
-    if any(meta.get(t) is None for t in must):
+    plan = eng.plan(all_terms)
+    idf = plan.idf
+    if any(t not in idf for t in must):
         return empty            # a required term absent from the corpus
-    total_df = sum(m[1] for m in meta.values() if m is not None)
-    if total_df >= SEGMENT_FANOUT_CUTOFF:
+    if plan.fan_out:
         if phrases:
             raise ValueError(
                 "simple_query_string with phrase clauses exceeds the "
-                f"driver candidate budget (Σdf {total_df} ≥ "
-                f"{SEGMENT_FANOUT_CUTOFF}); narrow the query or drop "
+                f"driver candidate budget (Σdf {plan.total_df} is at or "
+                "above SEGMENT_FANOUT_CUTOFF); narrow the query or drop "
                 "the quoted phrases (term clauses fall back to the "
                 "distributed locus automatically)")
         return simple_query_string_df(
             spark, index_dir, query, k, default_operator).toPandas()
-    live = [t for t in all_terms if meta.get(t) is not None]
-    by_term = eng._term_blocks(live)
+    by_term = eng._term_blocks(list(idf))
     decode_blocks_into([b for bl in by_term.values() for b in bl
                         if "_arrs" not in b])
-    idf = {t: meta[t][0] for t in live}
 
     # phrase matchers (scores + doc sets), unrestricted first — the
     # candidate algebra below needs must-phrase sets
     phrase_hits: list[tuple[str, np.ndarray, np.ndarray]] = []
     for kind, toks in phrases:
         uniq = list(dict.fromkeys(toks))
-        if any(meta.get(t) is None for t in uniq):
+        if any(t not in idf for t in uniq):
             if kind == "must":
                 return empty
             continue            # should/not phrase with a dead term
@@ -206,8 +205,7 @@ def simple_query_string_topk(spark: SparkSession, index_dir: str,
         if kind == "not":
             cand = cand[~np.isin(cand, pd_arr)]
     if eng.tombstones and cand.size:
-        cand = cand[~np.isin(cand, np.fromiter(eng.tombstones,
-                                               dtype=np.int64))]
+        cand = cand[live_mask(cand, eng)]
     if cand.size == 0:
         return empty
 
@@ -282,21 +280,20 @@ def match_bool_prefix_topk(spark: SparkSession, index_dir: str,
     vocab = eng._rg_index("term_dict", "term").read_range(
         prefix, prefix + _HI, ["term", "df"])
     expansions = sorted(vocab["term"].astype(str).tolist())
-    meta = eng._term_meta(full) if full else {}
-    live = [t for t in full if meta.get(t) is not None]
     # enforce the driver budget the docstring promises: the prefix
     # clause's doc-set union and the term clauses both decode their
     # postings driver-side, so Σ df over the expansions AND the terms
     # must fit the kernel locus — a head-prefix autocomplete at corpus
     # scale belongs on the completion table (T7)
-    total_df = (int(vocab["df"].sum()) if len(vocab) else 0) \
-        + sum(meta[t][1] for t in live)
-    if total_df >= SEGMENT_FANOUT_CUTOFF:
+    plan = eng.plan(full, extra_df=int(vocab["df"].sum()) if len(vocab)
+                    else 0)
+    live = list(plan.idf)
+    if plan.fan_out:
         raise ValueError(
             "match_bool_prefix exceeds the driver candidate budget (Σdf "
-            f"{total_df} ≥ {SEGMENT_FANOUT_CUTOFF} over the prefix "
-            f"{prefix!r} expansions and the term clauses); serve broad "
-            "autocomplete from the completion table "
+            f"{plan.total_df} over the prefix {prefix!r} expansions and "
+            "the term clauses is at or above SEGMENT_FANOUT_CUTOFF); "
+            "serve broad autocomplete from the completion table "
             "(SearchEngine.suggest, T7), lengthen the prefix or narrow "
             "the terms")
     pref_docs = _terms_doc_set(eng, expansions)["doc_id"] \
@@ -318,8 +315,7 @@ def match_bool_prefix_topk(spark: SparkSession, index_dir: str,
         cand = np.unique(np.concatenate(parts)) if parts else \
             np.empty(0, np.int64)
     if eng.tombstones and cand.size:
-        cand = cand[~np.isin(cand, np.fromiter(eng.tombstones,
-                                               dtype=np.int64))]
+        cand = cand[live_mask(cand, eng)]
     if cand.size == 0:
         return empty
     doc_parts = [pref_docs[np.isin(pref_docs, cand)]]
@@ -332,7 +328,7 @@ def match_bool_prefix_topk(spark: SparkSession, index_dir: str,
         dls = np.concatenate([_block_arrays(b)[2] for b in bl]) \
             .astype(np.float64)
         m = np.isin(docs, cand)
-        contrib = meta[t][0] * tfs[m] * (K1 + 1.0) / (
+        contrib = plan.idf[t] * tfs[m] * (K1 + 1.0) / (
             tfs[m] + K1 * (1.0 - B + B * dls[m] / eng.avgdl))
         doc_parts.append(docs[m])
         score_parts.append(contrib)

@@ -44,7 +44,8 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from .expand import _fuzzy_candidates
-from .topk import SearchEngine, _block_arrays, _block_positions, get_engine
+from .topk import (SearchEngine, _block_arrays, _block_positions, get_engine,
+                   live_mask)
 from ..functions.analysis import analyze_search
 from ..functions.encode import decode_blocks_into
 
@@ -87,11 +88,8 @@ def _pair_cf(eng: SearchEngine, a: str, b: str) -> int:
     # (Stupid Backoff exists because higher-order evidence is sometimes
     # unavailable), so the suggester stays total-cost bounded instead
     # of failing on common left-contexts.
-    from .topk import SEGMENT_FANOUT_CUTOFF
-    meta = eng._term_meta([a, b])
-    if any(meta.get(t) is None for t in (a, b)) or \
-            sum(m[1] for m in meta.values() if m is not None) \
-            >= SEGMENT_FANOUT_CUTOFF:
+    plan = eng.plan([a, b])
+    if a not in plan.idf or b not in plan.idf or plan.fan_out:
         return 0
     by_term = eng._term_blocks([a, b])
     out = 0
@@ -106,8 +104,7 @@ def _pair_cf(eng: SearchEngine, a: str, b: str) -> int:
             per[t] = (blocks, docs, ends)
         cand = np.intersect1d(per[a][1], per[b][1], assume_unique=True)
         if eng.tombstones and cand.size:
-            cand = cand[~np.isin(cand, np.fromiter(eng.tombstones,
-                                                   dtype=np.int64))]
+            cand = cand[live_mask(cand, eng)]
         if cand.size:
             keys: dict[str, np.ndarray] = {}
             for t in (a, b):

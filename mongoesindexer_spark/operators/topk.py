@@ -289,13 +289,25 @@ class QueryShape(__import__("typing").NamedTuple):
     ``mode``/``min_should`` give the term semantics.  ``search_after``
     is the deep-paging cursor.  ``use_wand`` forces the WAND (True) or
     exhaustive (False) term kernel; None chooses by candidate postings
-    (``EXHAUSTIVE_CUTOFF``)."""
+    (``EXHAUSTIVE_CUTOFF``).  ``span_end``: a phrase match must START at
+    a 0-based position below it (ES ``span_first`` ``end``), None = no
+    bound."""
     mode: str = "or"
     min_should: int | None = None
     search_after: tuple[float, int] | None = None
     phrase_terms: list[str] | None = None
     slop: int = 0
     use_wand: bool | None = None
+    span_end: int | None = None
+
+
+class LocusPlan(__import__("typing").NamedTuple):
+    """:meth:`SearchEngine.plan`'s answer: the live query terms' idf in
+    the caller's order, their Σdf (plus the caller's ``extra_df``), and
+    whether that Σdf sends the query off the driver."""
+    idf: dict[str, float]
+    total_df: int
+    fan_out: bool
 
 
 def _query_terms(query_text: str, cfg: AnalyzerConfig) -> list[str]:
@@ -318,6 +330,14 @@ def drop_tombstoned(df: DataFrame, tombstones) -> DataFrame:
                                                     count=len(ids)))}),
         "doc_id long")
     return df.join(F.broadcast(ts), "doc_id", "left_anti")
+
+
+def live_mask(ids: np.ndarray, tombstones) -> np.ndarray:
+    """The driver twin of :func:`drop_tombstoned`: a boolean mask over
+    the doc_id array ``ids``, True where the doc is not tombstoned.
+    ``tombstones`` is a :class:`SearchEngine` or a set of doc ids."""
+    ts = getattr(tombstones, "tombstones", tombstones)
+    return ~np.isin(ids, np.fromiter(ts, dtype=np.int64, count=len(ts)))
 
 
 # ---------------------------------------------------------------------------
@@ -848,6 +868,44 @@ class SearchEngine:
                 self._block_cache.popitem(last=False)
             return out
 
+    def plan(self, terms: list[str], extra_df: int = 0) -> LocusPlan:
+        """The one locus decision of every serving path.  Point-reads the
+        term_dict rows of ``terms`` (:meth:`_term_meta`) and keeps the
+        live ones: a fully-tombstoned term loses its dictionary row at
+        sync but keeps posting blocks until compaction, and no scoring
+        path may see a term it has no idf for.  ``fan_out`` is whether
+        Σdf over the live terms, plus ``extra_df`` (postings the caller
+        decodes besides, e.g. a prefix clause's expansions), reaches
+        SEGMENT_FANOUT_CUTOFF.  Each caller keeps its own action above
+        the cutoff: segment fan-out, the Spark locus, a backoff or a
+        refusal."""
+        meta = self._term_meta(terms)
+        idf = {t: meta[t][0] for t in terms if meta[t] is not None}
+        total_df = sum(meta[t][1] for t in idf) + int(extra_df)
+        return LocusPlan(idf, total_df, total_df >= SEGMENT_FANOUT_CUTOFF)
+
+    def _run_locus(self, plan: LocusPlan, k: int, shape: QueryShape,
+                   flt=None, allowed_docs=None,
+                   use_segments: bool | None = None) -> pd.DataFrame:
+        """Run ``shape`` over the plan's live terms on the locus the plan
+        chose (``use_segments`` overrides it): :meth:`topk_segments`, or
+        :func:`topk_kernel` over the driver's cached blocks."""
+        terms = list(plan.idf)
+        if plan.fan_out if use_segments is None else use_segments:
+            return self.topk_segments(terms, plan.idf, k, shape,
+                                      filter_clause=flt,
+                                      allowed_docs=allowed_docs)
+        return self.hits_frame(topk_kernel(
+            self._term_blocks(terms), plan.idf, self.avgdl, k,
+            self.tombstones, shape, self._restrict(flt, allowed_docs)))
+
+    def _check_positions(self, what: str) -> None:
+        if not self.has_positions:
+            raise ValueError(
+                f"index at {self.index_dir!r} was built without positions "
+                f"(index_positions=False) — {what} need position streams; "
+                "rebuild with IndexBuilder(index_positions=True)")
+
     def topk_wand(self, query_text: str, k: int,
                   use_wand: bool | None = None,
                   use_segments: bool | None = None,
@@ -868,13 +926,14 @@ class SearchEngine:
         queries.  Both paths return identical rankings (property-tested).
         ``use_wand`` forces a path (None = cost-based).
 
-        Execution locus is cost-based too: when the candidate posting
-        count (Σ df from term_dict — a ≤|q|-row point read) exceeds
-        SEGMENT_FANOUT_CUTOFF, the query fans out per doc-disjoint segment
-        group as a Spark job and only ≤k rows per group reach the driver
-        (:meth:`topk_segments`) — a head term ("the" ≈ N postings) must
-        never materialize its full candidate block set driver-side.
-        ``use_segments`` forces the locus (None = cost-based).
+        Execution locus is cost-based too (:meth:`plan`): when the
+        candidate posting count (Σ df from term_dict — a ≤|q|-row point
+        read) reaches SEGMENT_FANOUT_CUTOFF, the query fans out per
+        doc-disjoint segment group as a Spark job and only ≤k rows per
+        group reach the driver (:meth:`topk_segments`) — a head term
+        ("the" ≈ N postings) must never materialize its full candidate
+        block set driver-side.  ``use_segments`` forces the locus (None =
+        cost-based).
 
         ``mode="and"`` gives conjunctive semantics (ES ``bool.filter`` of
         term queries, J6): only docs containing EVERY analyzed query term,
@@ -915,30 +974,19 @@ class SearchEngine:
             else _query_terms(query_text, self.cfg)
         if not analyzed:
             return self.hits_frame([])
-        meta = self._term_meta(analyzed)
-        td = {t: m[0] for t, m in meta.items() if m is not None}
-        # drop terms with no term_dict row NOW: a fully-tombstoned term
-        # loses its dictionary row at sync (exact delta arithmetic) but
-        # keeps posting blocks until compaction — scoring paths must
-        # never see a term they have no idf for (KeyError otherwise)
-        terms = [t for t in analyzed if t in td]
+        plan = self.plan(analyzed)
         # conjunctive: a query term with no live postings means no doc can
         # contain every term (same as topk_df, whose n_terms count can
         # never reach len(analyzed))
-        if not terms or (mode == "and" and len(terms) < len(analyzed)):
+        if not plan.idf or (mode == "and"
+                            and len(plan.idf) < len(analyzed)):
             return self.hits_frame([])
         flt = self._resolve_filter_list(filter_field, filter_value,
                                         filter_normalized, filters)
         shape = QueryShape(mode, min_should_match, search_after,
                            use_wand=use_wand)
-        if use_segments is None:
-            total_df = sum(m[1] for m in meta.values() if m is not None)
-            use_segments = total_df >= SEGMENT_FANOUT_CUTOFF
-        if use_segments:
-            return self.topk_segments(terms, td, k, shape, filter_clause=flt)
-        return self.hits_frame(topk_kernel(
-            self._term_blocks(terms), td, self.avgdl, k, self.tombstones,
-            shape, self._restrict(flt)))
+        return self._run_locus(plan, k, shape, flt,
+                               use_segments=use_segments)
 
     def phrase_topk(self, phrase_text: str, k: int,
                     use_segments: bool | None = None,
@@ -972,44 +1020,32 @@ class SearchEngine:
         block decodes, not its posting list — see phrase_topk_arrays).
         The block FETCH is still per-term (`_term_blocks` point-reads all
         of a term's block rows), so fan-out to doc-disjoint segment
-        groups triggers on the same Σ df gate — a head term's encoded
+        groups triggers on the same :meth:`plan` — a head term's encoded
         blocks must not reach the driver at corpus scale.
         ``filter_field``/``search_after``: as in :meth:`topk_wand`.
         ``allowed_docs``: restrict evaluation to these doc_ids (the
         rescore-window hook, operators/rescore.py) — candidate
         intersection and position verify are bounded by the given set.
-        The Σdf fan-out gate still applies: a head-term phrase routes
+        The plan's fan-out still applies: a head-term phrase routes
         to :meth:`topk_segments` with the window broadcast (k-sized),
         so the term's encoded blocks never reach the driver.
         """
         _check_k(k)
-        if not self.has_positions:
-            raise ValueError(
-                f"index at {self.index_dir!r} was built without positions "
-                "(index_positions=False) — phrase queries need position "
-                "streams; rebuild with IndexBuilder(index_positions=True)")
+        self._check_positions("phrase queries")
         # ORDERED, duplicates kept: "to be or not to be" is six terms
         terms = analyze_search(phrase_text, self.cfg)
         if not terms:
             return self.hits_frame([])
         uniq = list(dict.fromkeys(terms))
-        meta = self._term_meta(uniq)
-        if any(meta[t] is None for t in uniq):
+        plan = self.plan(uniq)
+        if len(plan.idf) < len(uniq):
             return self.hits_frame([])   # a term absent ⇒ no phrase match
-        idf = {t: m[0] for t, m in meta.items()}
         flt = self._resolve_filter_list(filter_field, filter_value,
                                         filter_normalized, filters)
         shape = QueryShape(search_after=search_after, phrase_terms=terms,
                            slop=slop)
-        if use_segments is None:
-            total_df = sum(m[1] for m in meta.values())
-            use_segments = total_df >= SEGMENT_FANOUT_CUTOFF
-        if use_segments:
-            return self.topk_segments(uniq, idf, k, shape, filter_clause=flt,
-                                      allowed_docs=allowed_docs)
-        return self.hits_frame(topk_kernel(
-            self._term_blocks(uniq), idf, self.avgdl, k, self.tombstones,
-            shape, self._restrict(flt, allowed_docs)))
+        return self._run_locus(plan, k, shape, flt, allowed_docs,
+                               use_segments)
 
     def phrase_prefix_topk(self, phrase_text: str, k: int,
                            max_expansions: int = 50) -> pd.DataFrame:
@@ -1036,10 +1072,7 @@ class SearchEngine:
         kernel prunes)."""
         _check_k(k)
         empty = self.hits_frame([])
-        if not self.has_positions:
-            raise ValueError(
-                f"index at {self.index_dir!r} was built without positions "
-                "— phrase_prefix queries need position streams")
+        self._check_positions("phrase_prefix queries")
         terms = analyze_search(phrase_text, self.cfg)
         if not terms:
             return empty
@@ -1050,10 +1083,9 @@ class SearchEngine:
         if exps.empty:
             return empty
         ufixed = list(dict.fromkeys(fixed))
-        meta = self._term_meta(ufixed)
-        if any(meta[t] is None for t in ufixed):
+        idf = dict(self.plan(ufixed).idf)
+        if len(idf) < len(ufixed):
             return empty
-        idf = {t: m[0] for t, m in meta.items()}
         exp_terms = exps["term"].astype(str).tolist()
         by_term = self._term_blocks(ufixed + exp_terms)
         if len([t for t in ufixed if t in by_term]) < len(ufixed):
@@ -1082,9 +1114,8 @@ class SearchEngine:
         cols = ["term", "tf", "doc_len", "idf", "contribution"]
         if doc_id in self.tombstones:
             return pd.DataFrame(columns=cols)
-        terms = _query_terms(query_text, self.cfg)
-        meta = self._term_meta(terms)
-        terms = [t for t in terms if meta.get(t) is not None]
+        idf_of = self.plan(_query_terms(query_text, self.cfg)).idf
+        terms = list(idf_of)
         if not terms:
             return pd.DataFrame(columns=cols)
         by_term = self._term_blocks(terms)
@@ -1098,7 +1129,7 @@ class SearchEngine:
                 if i < docs.size and int(docs[i]) == doc_id:
                     tf = float(tfs[i])
                     dl = int(dls[i])
-                    idf = meta[t][0]
+                    idf = idf_of[t]
                     contrib = idf * tf * (K1 + 1.0) / (
                         tf + K1 * (1.0 - B + B * dl / self.avgdl))
                     rows.append({"term": t, "tf": int(tf), "doc_len": dl,
@@ -1259,7 +1290,15 @@ class SearchEngine:
 
 # Module-level cache: (index_dir) → SearchEngine, invalidated when any
 # index table advances to a new snapshot (e.g. after incremental sync).
-_ENGINES: dict[str, SearchEngine] = {}
+# An LRU of ENGINE_CACHE_SIZE engines: every engine holds its segment
+# files open (one fd per parquet file per table it has read), and a
+# process that opened many indexes would otherwise keep them all — past
+# fd 1024 py4j's callback server fails in select(), so streaming
+# foreachBatch callbacks are silently never run.  An evicted engine is
+# closed; a caller still holding it reopens its directories lazily
+# (SearchEngine._rg_index).
+ENGINE_CACHE_SIZE = 8
+_ENGINES: "OrderedDict[str, SearchEngine]" = OrderedDict()
 _ENGINES_LOCK = __import__("threading").Lock()
 
 
@@ -1288,6 +1327,9 @@ def get_engine(spark: SparkSession, index_dir: str,
                 eng.close()  # release the stale engine's pools + fds
             eng = SearchEngine(spark, index_dir, cfg, catalog=cat)
             _ENGINES[index_dir] = eng
+        _ENGINES.move_to_end(index_dir)
+        while len(_ENGINES) > ENGINE_CACHE_SIZE:
+            _ENGINES.popitem(last=False)[1].close()
         return eng
 
 
@@ -1426,9 +1468,12 @@ BLOCK_CACHE_TERMS = 256
 BLOCK_CACHE_MAX_POSTINGS = 1 << 20
 
 # above this many candidate POSTINGS (Σ df over query terms), the query
-# must not materialize its blocks in the driver: fan out per segment group
-# (SearchEngine.topk_segments) and pay one Spark job instead — at 10^12
-# docs a head term's blocks are terabytes, while ≤k rows per group is the
+# must not materialize its blocks in the driver: SearchEngine.plan, the
+# only reader of this constant, sets fan_out, and each serving path takes
+# its own off-driver action (top-k, phrase and span_first fan out per
+# segment group via SearchEngine.topk_segments; hit-set aggs and
+# term-only simple_query_string take their Spark locus) — at 10^12 docs a
+# head term's blocks are terabytes, while ≤k rows per group is the
 # bounded merge traffic.  ~64 MB of decoded postings is where the driver
 # fetch stops being obviously cheap.
 SEGMENT_FANOUT_CUTOFF = 1 << 22
@@ -1469,8 +1514,8 @@ def topk_kernel(by_term: dict[str, list[dict]], idf: dict[str, float],
                 restrict=None) -> list[tuple[float, int]]:
     """The one scoring-kernel dispatch → ``[(score, doc_id)]``
     best-first, run unchanged on the driver (``SearchEngine.topk_wand``,
-    ``phrase_topk``, ``phrase_prefix_topk``) and inside every fan-out
-    task (:meth:`SearchEngine.topk_segments`).
+    ``phrase_topk``, ``phrase_prefix_topk``, ``span.span_first_topk``)
+    and inside every fan-out task (:meth:`SearchEngine.topk_segments`).
 
     ``by_term``: the posting-block rows of the query terms that have
     any on this locus (the driver, or one segment group).  ``idf``: the
@@ -1491,7 +1536,8 @@ def topk_kernel(by_term: dict[str, list[dict]], idf: dict[str, float],
     if shape.phrase_terms is not None:
         return phrase_topk_arrays(shape.phrase_terms, idf, by_term, avgdl,
                                   k, tombstones, after=shape.search_after,
-                                  allowed_fn=restrict, slop=shape.slop)
+                                  allowed_fn=restrict, slop=shape.slop,
+                                  span_end=shape.span_end)
     terms = [t for t in idf if t in by_term]
     if not terms:
         return []
@@ -1627,7 +1673,7 @@ def exhaustive_topk_arrays(term_blocks: dict[str, tuple[float, list[dict]]],
         keep = np.isin(uniq, allowed, assume_unique=True)
         uniq, agg = uniq[keep], agg[keep]
     if tombstones:
-        keep = ~np.isin(uniq, np.fromiter(tombstones, dtype=np.int64))
+        keep = live_mask(uniq, tombstones)
         uniq, agg = uniq[keep], agg[keep]
     if after is not None:
         s0, d0 = float(after[0]), int(after[1])
@@ -1767,7 +1813,9 @@ def phrase_topk_arrays(phrase_terms: list[str],
                        tombstones: set[int] | None = None,
                        after: tuple[float, int] | None = None,
                        allowed_fn=None,
-                       slop: int = 0) -> list[tuple[float, int]]:
+                       slop: int = 0,
+                       span_end: int | None = None
+                       ) -> list[tuple[float, int]]:
     """Exact-phrase top-k over positional posting blocks (ES
     ``match_phrase``, slop=0) → [(score, doc_id)] best-first.
 
@@ -1797,7 +1845,9 @@ def phrase_topk_arrays(phrase_terms: list[str],
     ``allowed_fn``: ES filter context — maps the sorted candidate doc
     array to its allowed subset (candidate-bounded resolution, see
     :func:`filter_candidates`).  ``after``: search_after
-    cursor, as in the other kernels.
+    cursor, as in the other kernels.  ``span_end``: only start positions
+    below it count (ES ``span_first``; a one-term phrase then scores
+    tf = its distinct positions below ``end``).
     """
     uniq = list(dict.fromkeys(phrase_terms))
     if any(t not in by_term or not by_term[t] for t in uniq):
@@ -1839,8 +1889,7 @@ def phrase_topk_arrays(phrase_terms: list[str],
         if cand.size == 0:
             return []
     if tombstones:
-        cand = cand[~np.isin(cand,
-                             np.fromiter(tombstones, dtype=np.int64))]
+        cand = cand[live_mask(cand, tombstones)]
     if allowed_fn is not None and cand.size:
         cand = np.asarray(allowed_fn(cand), dtype=np.int64)
     if cand.size == 0:
@@ -1880,6 +1929,8 @@ def phrase_topk_arrays(phrase_terms: list[str],
         idx_rep = np.repeat(np.arange(cand.size, dtype=np.int64), lens)
         keys[t] = (idx_rep << np.int64(32)) | flat
     starts = np.unique(keys[phrase_terms[0]])
+    if span_end is not None:
+        starts = starts[(starts & np.int64(0xFFFFFFFF)) < span_end]
     if slop == 0:
         for j, tj in enumerate(phrase_terms[1:], start=1):
             if starts.size == 0:

@@ -151,9 +151,9 @@ def test_guards(spark, qs_index):
     with pytest.raises(ValueError, match="term clauses only"):
         simple_query_string_df(spark, d, '+"beta gamma"', 5)
     # Σdf over the cutoff with phrases raises; term-only falls back
-    import mongoesindexer_spark.operators.query_string as qsm
-    orig = qsm.SEGMENT_FANOUT_CUTOFF
-    qsm.SEGMENT_FANOUT_CUTOFF = 1
+    import mongoesindexer_spark.operators.topk as tk
+    orig = tk.SEGMENT_FANOUT_CUTOFF
+    tk.SEGMENT_FANOUT_CUTOFF = 1
     try:
         with pytest.raises(ValueError, match="driver candidate budget"):
             simple_query_string_topk(spark, d, '+common "beta gamma"', 5)
@@ -161,7 +161,7 @@ def test_guards(spark, qs_index):
         want = _brute(rows, ["common"], ["alpha"], ["nope"], k=5)
         assert [int(x) for x in fb["doc_id"]] == [i for _, i in want]
     finally:
-        qsm.SEGMENT_FANOUT_CUTOFF = orig
+        tk.SEGMENT_FANOUT_CUTOFF = orig
 
 
 def test_match_bool_prefix(spark, qs_index):
@@ -303,17 +303,17 @@ def test_match_bool_prefix_budget_guard(spark, qs_index):
     """The prefix clause enforces the driver Σdf budget the module doc
     promises — a too-broad prefix raises with the completion-table
     pointer instead of decoding unbounded postings driver-side."""
-    import mongoesindexer_spark.operators.query_string as qsm
+    import mongoesindexer_spark.operators.topk as tk
     from mongoesindexer_spark.operators.query_string import \
         match_bool_prefix_topk
     d, rows = qs_index
-    orig = qsm.SEGMENT_FANOUT_CUTOFF
-    qsm.SEGMENT_FANOUT_CUTOFF = 1
+    orig = tk.SEGMENT_FANOUT_CUTOFF
+    tk.SEGMENT_FANOUT_CUTOFF = 1
     try:
         with pytest.raises(ValueError, match="completion table"):
             match_bool_prefix_topk(spark, d, "alpha bet", 5)
     finally:
-        qsm.SEGMENT_FANOUT_CUTOFF = orig
+        tk.SEGMENT_FANOUT_CUTOFF = orig
 
 
 def test_match_bool_prefix_budget_counts_term_clauses(spark, qs_index,
@@ -321,13 +321,13 @@ def test_match_bool_prefix_budget_counts_term_clauses(spark, qs_index,
     """The term clauses' df counts toward the same driver budget as the
     prefix expansions: a cutoff the prefix alone stays under still
     refuses once the full-term clause is added."""
-    import mongoesindexer_spark.operators.query_string as qsm
+    import mongoesindexer_spark.operators.topk as tk
     from mongoesindexer_spark.operators.query_string import \
         match_bool_prefix_topk
     d, rows = qs_index
     pref_df = sum(any(w.startswith("bet") for w in t.split())
                   for _, t in rows)
-    monkeypatch.setattr(qsm, "SEGMENT_FANOUT_CUTOFF", pref_df + 1)
+    monkeypatch.setattr(tk, "SEGMENT_FANOUT_CUTOFF", pref_df + 1)
     assert len(match_bool_prefix_topk(spark, d, "bet", 5)) == 5
     with pytest.raises(ValueError, match="driver candidate budget"):
         match_bool_prefix_topk(spark, d, "common bet", 5)

@@ -72,15 +72,37 @@ def test_span_first_guards(spark, sp_index):
         span_first_topk(spark, d, "two words", 5, 10)
 
 
-def test_span_first_budget_guard(spark, sp_index):
-    import mongoesindexer_spark.operators.span as sp
+def test_span_first_fans_out_over_the_cutoff(spark, sp_index, monkeypatch):
+    """At or above SEGMENT_FANOUT_CUTOFF span_first runs the phrase kernel
+    per segment group (topk_segments) instead of raising, and the merged
+    answer is bit-identical to the driver kernel's, with and without a
+    tombstone."""
+    import mongoesindexer_spark.operators.topk as tk
     from mongoesindexer_spark.operators.span import span_first_topk
     d, _ = sp_index
-    import mongoesindexer_spark.operators.topk as tk
-    orig = tk.SEGMENT_FANOUT_CUTOFF
-    tk.SEGMENT_FANOUT_CUTOFF = 1
-    try:
-        with pytest.raises(ValueError, match="candidate budget"):
-            span_first_topk(spark, d, "target", 5, 10)
-    finally:
-        tk.SEGMENT_FANOUT_CUTOFF = orig
+    eng = tk.get_engine(spark, d)
+    calls = []
+    fan_out = tk.SearchEngine.topk_segments
+
+    def counted(self, *a, **kw):
+        calls.append(a[0])
+        return fan_out(self, *a, **kw)
+    monkeypatch.setattr(tk.SearchEngine, "topk_segments", counted)
+    monkeypatch.setattr(tk, "SEGMENT_MAX_GROUPS", 2)
+    cutoff = tk.SEGMENT_FANOUT_CUTOFF
+
+    def answer(c):
+        monkeypatch.setattr(tk, "SEGMENT_FANOUT_CUTOFF", c)
+        out = span_first_topk(spark, d, "target", 5, 30)
+        return [(int(x), float(s)) for x, s in zip(out["doc_id"],
+                                                   out["score"])]
+    driver = answer(cutoff)
+    assert driver and not calls
+    assert answer(1) == driver
+    assert calls == [["target"]]
+    dead = driver[0][0]
+    monkeypatch.setattr(eng, "tombstones", {dead})
+    driver_ts = answer(cutoff)
+    assert driver_ts == [h for h in driver if h[0] != dead]
+    assert answer(1) == driver_ts
+    assert len(calls) == 2

@@ -251,3 +251,41 @@ def test_block_lru_keeps_the_querys_own_terms(spark, tiny_index,
             [(r["doc_id"], round(r["score"], 9)) for r in want]
     finally:
         eng.close()
+
+
+def test_engine_cache_is_bounded(spark, tiny_index, tmp_path):
+    """get_engine keeps at most ENGINE_CACHE_SIZE engines and closes each
+    one it evicts, so a process that opens many indexes holds a bounded
+    number of fds; an evicted engine a caller kept reopens its files on
+    its next query and answers as before."""
+    import os
+    import shutil
+
+    from mongoesindexer_spark.operators import topk as topk_mod
+    from mongoesindexer_spark.operators.topk import get_engine
+
+    cap = topk_mod.ENGINE_CACHE_SIZE
+    q = "udrndau lda"
+    dirs = []
+    for i in range(cap + 6):
+        dirs.append(str(tmp_path / f"idx{i}"))
+        shutil.copytree(tiny_index, dirs[-1])
+    held = get_engine(spark, dirs[0])
+    want = held.topk_wand(q, 10)
+    fds = []
+    for d in dirs[1:]:
+        get_engine(spark, d).topk_wand(q, 10)
+        assert len(topk_mod._ENGINES) <= cap
+        fds.append(len(os.listdir("/proc/self/fd")))
+    assert dirs[0] not in topk_mod._ENGINES
+    # each tiny engine holds ~19 fds: once the cache is full, five more
+    # opens must not grow the process's fd count by more than a few
+    assert fds[-1] - fds[cap - 1] <= 8, fds
+    got = held.topk_wand(q, 10)
+    assert list(got["doc_id"]) == list(want["doc_id"])
+    assert list(got["score"]) == list(want["score"])
+    for d in dirs:
+        eng = topk_mod._ENGINES.pop(d, None)
+        if eng is not None:
+            eng.close()
+    held.close()
