@@ -2485,6 +2485,9 @@ def oracle_sql() -> dict[str, str]:
                                  WHERE term = 'merge')
             ORDER BY score DESC, doc_id ASC LIMIT {BM25_K}
         """,
+        # DuckDB's parallel float sum can order a last-bit tie either way
+        # (docs 351 and 474 at rank 20 on sf0.01): order on the score
+        # rounded to 9 places, then doc_id asc, as the engine breaks ties
         "ft_bm25_bool_filters": bm25_scores.format(terms=terms) + f"""
             SELECT doc_id, CAST(round(score * 1e4) AS BIGINT) AS score_e4
             FROM scores
@@ -2493,7 +2496,7 @@ def oracle_sql() -> dict[str, str]:
               AND doc_id NOT IN (SELECT doc_id FROM documents
                                  WHERE n_chars BETWEEN {RANGE_LO}
                                                    AND {RANGE_HI})
-            ORDER BY score DESC, doc_id ASC LIMIT {BM25_K}
+            ORDER BY round(score, 9) DESC, doc_id ASC LIMIT {BM25_K}
         """,
         "ft_phrase_suggest": f"""
             WITH toksl AS (

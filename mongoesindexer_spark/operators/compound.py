@@ -21,10 +21,12 @@ wrappers that reshape relevance without introducing new scoring math:
   "filter only, skip scoring" and costs exactly the hit-set scan.
 
 Scale shapes: dis_max inherits multi_match's one-shuffle distributed
-combine; boosting's Spark locus is the ``topk_df`` score frame plus one
-broadcast-or-shuffle left join against the (typically far smaller)
-negative match set; constant_score is a single term-pushed scan +
-TakeOrderedAndProject — no driver materialization anywhere.
+combine; boosting's Spark locus is ``topk_df``'s query phase (the
+engine's scored postings summed per doc) plus one broadcast-or-shuffle
+left join against the (typically far smaller) negative match set, then
+a url point read for the k winners; constant_score is a single
+term-pushed scan + TakeOrderedAndProject — no driver materialization of
+candidate sets anywhere.
 """
 
 from __future__ import annotations
@@ -36,8 +38,8 @@ from pyspark.sql import functions as F
 
 from ..functions.encode import decode_blocks_into
 from .multi_match import multi_match_topk
-from .topk import (SearchEngine, _check_k, _query_terms, drop_tombstoned,
-                   get_engine, live_mask, match_scores_arrays)
+from .topk import (SearchEngine, _check_k, _query_terms, get_engine,
+                   live_mask, match_scores_arrays)
 
 
 def dis_max_topk(spark: SparkSession, index_dirs: dict[str, str],
@@ -88,7 +90,7 @@ def boosting_topk(spark: SparkSession, index_dir: str, positive: str,
     ``locus="kernel"``: score-all positive candidates
     (:func:`..topk.match_scores_arrays`) + an ``np.isin`` demotion mask
     from the negative match set — cost ∝ the two queries' Σdf, never the
-    corpus.  ``locus="spark"``: the ``topk_df`` score frame left-joined
+    corpus.  ``locus="spark"``: ``topk_df``'s query phase left-joined
     to the negative match set (broadcast when small), demoted in
     codegen, TakeOrderedAndProject — the head-term-scale path.
     """
@@ -122,27 +124,21 @@ def boosting_topk(spark: SparkSession, index_dir: str, positive: str,
 
 def _boosting_df(eng: SearchEngine, positive: str, negative: str, k: int,
                  negative_boost: float) -> DataFrame:
-    """Distributed twin: positive score frame (same shuffled partial-agg
-    plan as ``topk_df``) left-joined to the negative match set; the join
+    """Distributed twin: the positive query's per-doc BM25 (the query
+    phase of ``topk_df``) left-joined to the negative match set; the join
     is broadcast whenever AQE sizes the negative side under the
     threshold — the common case, rare-term demotions against head-term
-    positives."""
+    positives.  Fetch phase: :meth:`..topk.SearchEngine.fetch_top`."""
     from .aggs import match_set
     from .multi_match import _field_scores_df
     pos = _field_scores_df(eng, positive, 1.0)
-    pos = drop_tombstoned(pos, eng)
     neg = match_set(eng, negative).withColumn("neg", F.lit(True))
     demoted = (pos.join(neg, "doc_id", "left")
                .withColumn("score",
                            F.when(F.col("neg"),
                                   F.col("score") * F.lit(negative_boost))
                            .otherwise(F.col("score"))))
-    urls = eng.cat.read(eng.spark, "doc_stats").select("doc_id", "url")
-    return (demoted.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-            .join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score"))
+    return eng.fetch_top(demoted, k)
 
 
 # ---------------------------------------------------------------------------

@@ -14,9 +14,12 @@ Two paths, rank-identical (tested):
   read of the doc-ordered ``fields`` table's ``<field>_num`` sub-field
   (the same read range-filter context uses — cost ∝ candidates, never
   corpus); combine + top-k in numpy.
-- ``locus="spark"``: the ``topk_df``-shaped score frame joined to the
-  ``fields`` numeric sub-field, combined in codegen arithmetic,
-  TakeOrderedAndProject — the head-term-scale path.
+- ``locus="spark"``: the engine's scored postings
+  (``SearchEngine.scored_postings``, the query phase ``topk_df`` also
+  runs) summed per doc, joined to the ``fields`` numeric sub-field,
+  combined in codegen arithmetic, TakeOrderedAndProject; urls are
+  point-read for the k winners (``SearchEngine.fetch_top``) — the
+  head-term-scale path.
 
 Modifiers: ``none`` (factor×v), ``log1p`` (ln(1 + factor×v)), ``sqrt``;
 boost_mode: ``multiply`` (ES default) or ``sum``.  Docs with a NULL
@@ -31,8 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .topk import SearchEngine, _query_terms, drop_tombstoned, \
-    get_engine, live_mask, match_scores_arrays
+from .topk import SearchEngine, _query_terms, get_engine, live_mask, \
+    match_scores_arrays
 
 MODIFIERS = ("none", "log1p", "sqrt")
 BOOST_MODES = ("multiply", "sum")
@@ -218,58 +221,39 @@ def _decay_score_df(eng: SearchEngine, query_text: str, k: int, sub: str,
                     missing: float) -> DataFrame:
     """Distributed twin of the decay kernel path — the same plan as
     ``_function_score_df`` with the decay weight in codegen."""
-    from .build_index import read_fields
-    from .multi_match import _field_scores_df
-    bm25 = _field_scores_df(eng, query_text, 1.0) \
-        .withColumnRenamed("score", "bm25")
-    bm25 = drop_tombstoned(bm25, eng)
-    vals = read_fields(eng.cat, eng.spark).select("doc_id", sub)
     w = _decay_col(F.coalesce(F.col(sub).cast("double"),
                               F.lit(float(missing))),
                    fn, origin, scale, offset, decay)
-    combined = (bm25.join(vals, "doc_id", "left")
-                .withColumn("score",
-                            F.col("bm25") * w if boost_mode == "multiply"
-                            else F.col("bm25") + w))
-    urls = eng.cat.read(eng.spark, "doc_stats").select("doc_id", "url")
-    return (combined.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-            .join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score"))
+    return _combined_top(eng, query_text, k, sub, w, boost_mode)
 
 
 def _function_score_df(eng: SearchEngine, query_text: str, k: int,
                        sub: str, factor: float, modifier: str,
                        boost_mode: str, missing: float) -> DataFrame:
-    """Distributed twin: the topk_df scoring frame joined to the fields
-    numeric sub-field; one extra broadcast-or-shuffle join over what
-    topk_df already does, combined in whole-stage codegen."""
-    from ..functions.encode import B, K1
-    from .build_index import read_fields, read_flat
-    terms = _query_terms(query_text, eng.cfg)
-    flat = read_flat(eng.cat, eng.spark).filter(F.col("term").isin(terms))
-    flat = drop_tombstoned(flat, eng)
-    td = eng.cat.read(eng.spark, "term_dict").filter(F.col("term").isin(terms))
-    bm25 = (flat.join(F.broadcast(td.select("term", "idf")), "term")
-            .withColumn("contrib",
-                        F.col("idf") * F.col("tf") * (K1 + 1.0)
-                        / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len")
-                                               / F.lit(eng.avgdl))))
-            .groupBy("doc_id").agg(F.sum("contrib").alias("bm25")))
-    vals = read_fields(eng.cat, eng.spark).select("doc_id", sub)
+    """Distributed twin of the field_value_factor kernel path."""
     w = _weight_col(F.coalesce(F.col(sub).cast("double"),
                                F.lit(float(missing))), factor, modifier)
+    return _combined_top(eng, query_text, k, sub, w, boost_mode)
+
+
+def _combined_top(eng: SearchEngine, query_text: str, k: int, sub: str,
+                  w, boost_mode: str) -> DataFrame:
+    """The Spark locus of both function_score shapes.  Query phase: the
+    per-doc BM25 frame multi_match and boosting also score from
+    (:func:`..multi_match._field_scores_df`) left-joined to the
+    ``fields`` numeric sub-field ``sub`` and combined with the weight
+    column ``w`` in whole-stage codegen; fetch phase:
+    :meth:`..topk.SearchEngine.fetch_top`."""
+    from .build_index import read_fields
+    from .multi_match import _field_scores_df
+    bm25 = _field_scores_df(eng, query_text, 1.0) \
+        .withColumnRenamed("score", "bm25")
+    vals = read_fields(eng.cat, eng.spark).select("doc_id", sub)
     combined = (bm25.join(vals, "doc_id", "left")
                 .withColumn("score",
                             F.col("bm25") * w if boost_mode == "multiply"
                             else F.col("bm25") + w))
-    urls = eng.cat.read(eng.spark, "doc_stats").select("doc_id", "url")
-    return (combined.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-            .join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score"))
+    return eng.fetch_top(combined, k)
 
 
 # ---------------------------------------------------------------------------

@@ -31,11 +31,13 @@ Two execution paths, rank-identical (property-tested):
   Σ_fields Σ_terms UB — valid for both modes because
   best_fields ≤ most_fields ≤ Σ UB whenever ``tie_breaker ≤ 1``
   (asserted).
-- ``locus="spark"`` — distributed: per-field score DataFrames (the same
-  shuffled partial-agg plan as ``SearchEngine.topk_df``) unioned with a
-  field ordinal, combined per doc_id with order-pinned ``F.aggregate``
-  folds, TakeOrderedAndProject к rows to the driver.  The 100-TB path:
-  one shuffle on doc_id, no driver materialization of candidate sets.
+- ``locus="spark"`` — distributed: per-field score DataFrames (the
+  query phase of ``SearchEngine.topk_df``: the engine's scored postings
+  summed per doc) unioned with a field ordinal, combined per doc_id with
+  order-pinned ``F.aggregate`` folds, TakeOrderedAndProject k rows to
+  the driver, whose urls are then point-read (the fetch phase).  The
+  100-TB path: one shuffle on doc_id, no driver materialization of
+  candidate sets.
 
 Float-determinism contract (same as the single-field kernels): per-field
 accumulation is in term order, cross-field combination in field order,
@@ -59,8 +61,8 @@ from pyspark.sql import functions as F
 
 from ..functions.encode import decode_blocks_into
 from .topk import (EXHAUSTIVE_CUTOFF, K1, B, SearchEngine, _check_k,
-                   _query_terms, _TermCursor, drop_tombstoned,
-                   get_engine, live_mask, match_scores_arrays)
+                   _query_terms, _TermCursor, get_engine, live_mask,
+                   match_scores_arrays)
 
 MODES = ("best_fields", "most_fields")
 
@@ -267,26 +269,17 @@ def multimatch_wand_arrays(field_cursors: list[tuple[float,
 # ---------------------------------------------------------------------------
 
 
-def _field_scores_df(eng: SearchEngine, query_text: str, boost: float
-                     ) -> DataFrame:
-    """(doc_id, score) over ALL docs matching ≥1 query term in this field
-    — the same shuffled partial-agg plan as ``SearchEngine.topk_df``
-    minus the top-k, with the field boost folded into idf."""
-    from .build_index import read_flat
-    terms = _query_terms(query_text, eng.cfg)
-    flat = read_flat(eng.cat, eng.spark).filter(F.col("term").isin(terms))
-    td = eng.cat.read(eng.spark, "term_dict").filter(F.col("term").isin(terms))
-    return (
-        flat.join(F.broadcast(td.select(
-            "term", (F.col("idf") * F.lit(boost)).alias("idf"))), "term")
-        .withColumn(
-            "contrib",
-            F.col("idf") * F.col("tf") * (K1 + 1.0)
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len")
-                                   / F.lit(eng.avgdl))))
-        .groupBy("doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
+def _field_scores_df(eng: SearchEngine, query_text: str, boost: float,
+                     tombstones=None) -> DataFrame:
+    """(doc_id, score) over ALL live docs matching ≥1 query term in this
+    field: the engine's scored postings
+    (:meth:`..topk.SearchEngine.scored_postings`, the query phase of
+    ``topk_df``) with the field boost folded into idf, summed per doc.
+    ``tombstones``: the doc ids to drop (default the engine's)."""
+    return (eng.scored_postings(_query_terms(query_text, eng.cfg), boost,
+                                tombstones)
+            .groupBy("doc_id")
+            .agg(F.sum("contrib").alias("score")))
 
 
 def multi_match_df(engines: dict[str, SearchEngine],
@@ -297,7 +290,8 @@ def multi_match_df(engines: dict[str, SearchEngine],
     """Distributed multi_match: per-field score DataFrames unioned with a
     field ordinal, combined per doc_id with order-pinned ``F.aggregate``
     folds (sequential in field order — the float contract the kernel
-    paths share), TakeOrderedAndProject.
+    paths share), TakeOrderedAndProject; urls are point-read for the k
+    winners (:meth:`..topk.SearchEngine.fetch_top`).
 
     One shuffle (groupBy doc_id inside each field's scorer + the final
     combine groupBy); candidate sets never reach the driver — the shape
@@ -313,19 +307,18 @@ def multi_match_df(engines: dict[str, SearchEngine],
                          f"index fields {sorted(engines)}")
     boosts = boosts or {}
     fields = list(engines)
+    tombs = set()
+    for eng in engines.values():
+        tombs |= eng.tombstones
     parts = []
     for i, f in enumerate(fields):
         parts.append(_field_scores_df(engines[f],
                                       _per_field_query(query_text, f),
-                                      float(boosts.get(f, 1.0)))
+                                      float(boosts.get(f, 1.0)), tombs)
                      .select("doc_id", F.lit(i).alias("fi"), "score"))
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
-    tombs = set()
-    for eng in engines.values():
-        tombs |= eng.tombstones
-    u = drop_tombstoned(u, tombs)
     per_doc = (u.groupBy("doc_id")
                .agg(F.sort_array(F.collect_list(F.struct("fi", "score")))
                     .alias("fs")))
@@ -351,13 +344,7 @@ def multi_match_df(engines: dict[str, SearchEngine],
                                  x["fi"] == -F.col("b.nfi"), zero)
                              .otherwise(x["score"])))
                         .alias("score")))
-    first = next(iter(engines.values()))
-    urls = first.cat.read(first.spark, "doc_stats").select("doc_id", "url")
-    return (combined
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-            .join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score"))
+    return next(iter(engines.values())).fetch_top(combined, k)
 
 
 # ---------------------------------------------------------------------------

@@ -44,7 +44,8 @@ Execution loci:
 - :func:`simple_query_string_df` — the distributed locus (term clauses
   only): ONE term-pushed postings scan, one shuffled aggregation
   computing score, must-coverage and exclusion flags together —
-  scale-safe at any hit-set size.
+  scale-safe at any hit-set size; urls are point-read for the k winners
+  (``SearchEngine.fetch_top``).
 """
 
 from __future__ import annotations
@@ -54,7 +55,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .topk import (B, K1, SearchEngine, _block_arrays, drop_tombstoned,
+from .topk import (B, K1, RESULT_DDL, SearchEngine, _block_arrays,
                    get_engine, live_mask, phrase_topk_arrays)
 from ..functions.analysis import analyze_search
 from ..functions.encode import decode_blocks_into
@@ -356,8 +357,9 @@ def terms_set_topk(spark: SparkSession, index_dir: str,
     shape IS the right one): one term-pushed postings scan joined to
     the ``fields`` table's ``<field>_num`` doc value, one aggregation
     carrying score + matched-clause count, the threshold predicate on
-    the aggregate — scale-safe at any hit-set size.  Docs with a NULL
-    threshold never match (ES: a missing minimum_should_match_field
+    the aggregate — scale-safe at any hit-set size — then urls
+    point-read for the k winners (:meth:`..topk.SearchEngine.fetch_top`,
+    a local relation).  Docs with a NULL threshold never match (ES: a missing minimum_should_match_field
     value means the doc can't satisfy the clause count).
 
     ``clamp=False`` (default) is ES's raw ``minimum_should_match_field``
@@ -365,7 +367,7 @@ def terms_set_topk(spark: SparkSession, index_dir: str,
     can never match.  ``clamp=True`` is the ubiquitous
     ``Math.min(params.num_terms, doc.value)`` script recipe from the ES
     docs — the threshold caps at the clause count."""
-    from .build_index import read_fields, read_flat
+    from .build_index import read_fields
     from .topk import _check_k
     _check_k(k)
     uniq = sorted(set(terms))
@@ -375,28 +377,16 @@ def terms_set_topk(spark: SparkSession, index_dir: str,
     sub = f"{min_match_field}_num"
     fields = read_fields(eng.cat, eng.spark).select(
         "doc_id", F.col(sub).alias("_msm"))
-    flat = read_flat(eng.cat, eng.spark).filter(F.col("term").isin(uniq))
-    flat = drop_tombstoned(flat, eng)
-    td = eng.cat.read(spark, "term_dict") \
-        .filter(F.col("term").isin(uniq)).select("term", "idf")
-    contrib = (F.col("idf") * F.col("tf") * (K1 + 1.0)
-               / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len")
-                                      / F.lit(eng.avgdl))))
-    agg = (flat.join(F.broadcast(td), "term")
+    agg = (eng.scored_postings(uniq)
            .groupBy("doc_id")
-           .agg(F.sum(contrib).alias("score"),
+           .agg(F.sum("contrib").alias("score"),
                 F.count_distinct("term").alias("n_matched")))
     thresh = F.least(F.col("_msm"), F.lit(len(uniq))) if clamp \
         else F.col("_msm")
     keep = agg.join(fields, "doc_id") \
         .filter(F.col("_msm").isNotNull()
                 & (F.col("n_matched") >= thresh))
-    topk = (keep.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-    urls = eng.cat.read(spark, "doc_stats").select("doc_id", "url")
-    return (topk.join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score"))
+    return eng.fetch_top(keep, k)
 
 
 def simple_query_string_df(spark: SparkSession, index_dir: str,
@@ -404,8 +394,8 @@ def simple_query_string_df(spark: SparkSession, index_dir: str,
                            default_operator: str = "or") -> DataFrame:
     """Distributed locus (term clauses only — module doc): one
     term-pushed scan, one aggregation carrying score + must coverage +
-    exclusion flags, TakeOrderedAndProject top-k."""
-    from .build_index import read_flat
+    exclusion flags, TakeOrderedAndProject top-k, then the fetch phase
+    (:meth:`..topk.SearchEngine.fetch_top`)."""
     from .topk import _check_k
     _check_k(k)
     eng = get_engine(spark, index_dir)
@@ -418,20 +408,11 @@ def simple_query_string_df(spark: SparkSession, index_dir: str,
     scored = sorted(must | should)
     all_terms = sorted(must | should | nots)
     if not scored:
-        return spark.createDataFrame(
-            [], "doc_id long, url string, score double")
-    flat = read_flat(eng.cat, eng.spark) \
-        .filter(F.col("term").isin(all_terms))
-    flat = drop_tombstoned(flat, eng)
-    td = eng.cat.read(spark, "term_dict") \
-        .filter(F.col("term").isin(scored)).select("term", "idf")
+        return spark.createDataFrame([], RESULT_DDL)
+    flat = eng.scored_postings(all_terms)
     scored_c = F.col("term").isin(scored)
-    contrib = (F.col("idf") * F.col("tf") * (K1 + 1.0)
-               / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len")
-                                      / F.lit(eng.avgdl))))
-    agg = (flat.join(F.broadcast(td), "term", "left")
-           .groupBy("doc_id")
-           .agg(F.sum(F.when(scored_c, contrib).otherwise(0.0))
+    agg = (flat.groupBy("doc_id")
+           .agg(F.sum(F.when(scored_c, F.col("contrib")).otherwise(0.0))
                 .alias("score"),
                 F.count_distinct(
                     F.when(F.col("term").isin(sorted(must)), F.col("term")))
@@ -442,9 +423,4 @@ def simple_query_string_df(spark: SparkSession, index_dir: str,
     keep = (F.col("n_must") == len(must)) & (F.col("excluded") == 0)
     if not must:
         keep = keep & (F.col("n_scored") >= 1)
-    topk = (agg.filter(keep).select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-    urls = eng.cat.read(spark, "doc_stats").select("doc_id", "url")
-    return (topk.join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score"))
+    return eng.fetch_top(agg.filter(keep), k)

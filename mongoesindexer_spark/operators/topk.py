@@ -340,6 +340,19 @@ def live_mask(ids: np.ndarray, tombstones) -> np.ndarray:
     return ~np.isin(ids, np.fromiter(ts, dtype=np.int64, count=len(ts)))
 
 
+# the Spark-DF loci's result schema (:meth:`SearchEngine.fetch_top`)
+RESULT_DDL = "doc_id long, url string, score double"
+
+
+def top_k(scores: DataFrame, k: int) -> DataFrame:
+    """The k best rows of a (doc_id, score) frame, score desc then
+    doc_id asc — the last step of every Spark-DF query phase, planned as
+    TakeOrderedAndProject (no global sort materialized)."""
+    return (scores.select("doc_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k))
+
+
 # ---------------------------------------------------------------------------
 # Exhaustive DataFrame path (correctness spine; Catalyst does the pruning)
 # ---------------------------------------------------------------------------
@@ -426,6 +439,8 @@ class SearchEngine:
         # live segment-file list for the fan-out path, computed lazily
         # once per engine (the segment set is frozen per snapshot)
         self._seg_files: list[tuple[str, int]] | None = None
+        # live postings_flat snapshot dirs, listed lazily (_flat_scan)
+        self._flat_dirs: list[str] | None = None
         # open the segment readers NOW (Lucene opens per-segment readers
         # at IndexReader construction): the footer sweep happens once at
         # engine warm-up instead of inflating the first query's latency
@@ -492,7 +507,55 @@ class SearchEngine:
         self._block_cache.clear()
         self._pair_cf_cache.clear()
 
-    # -- exhaustive DataFrame path ------------------------------------------
+    # -- Spark DataFrame loci: query phase + fetch phase ------------------
+    def _flat_scan(self) -> DataFrame:
+        """:func:`..build_index.read_flat`'s rows with the schema pinned to
+        FLAT_DDL, which every flat writer pins: an unpinned read runs a
+        schema-inference job per call.  A ParquetCatalog snapshot is one
+        immutable dir, so the live files' parents are the live dirs (32+
+        file paths would cost a listing job).  Other catalogs: ``read``."""
+        from .build_index import FLAT_DDL, read_flat
+        if not isinstance(self.cat, ParquetCatalog):
+            return read_flat(self.cat, self.spark)
+        with self._cache_lock:
+            if self._flat_dirs is None:
+                self._flat_dirs = list(dict.fromkeys(
+                    os.path.dirname(f)
+                    for f in self.cat.data_files("postings_flat")))
+        return (self.spark.read.schema(FLAT_DDL).parquet(*self._flat_dirs)
+                .filter(F.col("term").isNotNull())
+                .drop("url"))
+
+    def scored_postings(self, terms: list[str], boost: float = 1.0,
+                        tombstones=None) -> DataFrame:
+        """Query phase of every Spark-DF scoring locus: the flat postings
+        of ``terms``' live members (:meth:`plan`), term-pushed to the
+        scan, minus ``tombstones`` (default this engine's), each with its
+        ``idf`` × ``boost`` and BM25 ``contrib``.  The plan's idf values
+        are inlined as a literal map: no ``term_dict`` scan or join."""
+        idf = self.plan(terms).idf
+        flat = drop_tombstoned(
+            self._flat_scan().filter(F.col("term").isin(list(idf))),
+            self if tombstones is None else tombstones)
+        idf_of = F.create_map(*(F.lit(v) for t, i in idf.items()
+                                for v in (t, i * boost)))[F.col("term")] \
+            if idf else F.lit(None).cast("double")
+        return (
+            flat.withColumn("idf", idf_of)
+            .withColumn(
+                "contrib",
+                F.col("idf") * F.col("tf") * (K1 + 1.0)
+                / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len") / F.lit(self.avgdl))),
+            )
+        )
+
+    def fetch_top(self, scores: DataFrame, k: int) -> DataFrame:
+        """Fetch phase of every Spark-DF scoring locus: collects the
+        :func:`top_k` rows of a (doc_id, score) frame and point-reads
+        their urls (:meth:`hits_frame`) into a RESULT_DDL local relation."""
+        hits = [(r["score"], r["doc_id"]) for r in top_k(scores, k).collect()]
+        return self.spark.createDataFrame(self.hits_frame(hits), RESULT_DDL)
+
     def topk_df(self, query_text: str, k: int, mode: str = "or",
                 search_after: tuple[float, int] | None = None,
                 filter_field: str | None = None,
@@ -500,7 +563,12 @@ class SearchEngine:
                 filter_normalized: bool = False,
                 min_should_match: int | None = None,
                 filters: "list[tuple] | None" = None) -> DataFrame:
-        """``search_after``: deep-paging cursor (see :meth:`topk_wand`).
+        """BM25 top-k in ES's two phases.  Query phase: Catalyst sums the
+        :meth:`scored_postings` per doc and keeps the k best as
+        TakeOrderedAndProject.  Fetch phase (:meth:`fetch_top`): urls are
+        point-read for those k only, returned as a local relation.
+
+        ``search_after``: deep-paging cursor (see :meth:`topk_wand`).
         On this analytics path the cursor's score equality is only exact
         against scores from the SAME path (Spark float aggregation order
         is plan-dependent) — the same-path contract ES documents.
@@ -510,10 +578,10 @@ class SearchEngine:
         doc_id semi-join against the merge-on-read ``fields`` view,
         applied BEFORE aggregation so filtered-out postings never
         shuffle; Catalyst broadcasts whichever side is small."""
-        from .build_index import read_fields, read_flat
+        from .build_index import read_fields
         _check_k(k)
         terms = _query_terms(query_text, self.cfg)
-        flat = read_flat(self.cat, self.spark).filter(F.col("term").isin(terms))
+        flat = self.scored_postings(terms)
         flt_list = self._resolve_filter_list(filter_field, filter_value,
                                              filter_normalized, filters)
         if flt_list:
@@ -536,18 +604,8 @@ class SearchEngine:
                 else:
                     keep = fsrc.filter(pred).select("doc_id")
                     flat = flat.join(keep, "doc_id", "semi")
-        flat = drop_tombstoned(flat, self)
-        td = self.cat.read(self.spark, "term_dict").filter(F.col("term").isin(terms))
-        scored = (
-            flat.join(F.broadcast(td.select("term", "idf")), "term")
-            .withColumn(
-                "contrib",
-                F.col("idf") * F.col("tf") * (K1 + 1.0)
-                / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len") / F.lit(self.avgdl))),
-            )
-            .groupBy("doc_id")
-            .agg(F.sum("contrib").alias("score"), F.count("*").alias("n_terms"))
-        )
+        scored = flat.groupBy("doc_id").agg(
+            F.sum("contrib").alias("score"), F.count("*").alias("n_terms"))
         if mode == "and":
             scored = scored.filter(F.col("n_terms") == len(terms))
         if min_should_match is not None:
@@ -558,17 +616,7 @@ class SearchEngine:
             scored = scored.filter(
                 (F.col("score") < F.lit(s0))
                 | ((F.col("score") == F.lit(s0)) & (F.col("doc_id") > d0)))
-        topk = (
-            scored.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-        urls = self.cat.read(self.spark, "doc_stats").select("doc_id", "url")
-        return (
-            topk.join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score")
-        )
+        return self.fetch_top(scored, k)
 
     # -- block-max WAND path ---------------------------------------------------
     def _read_filtered(self, table: str, terms: list[str],
@@ -1341,11 +1389,14 @@ def bm25_topk_df(spark: SparkSession, index_dir: str, query_text: str, k: int,
                  filter_normalized: bool = False,
                  min_should_match: int | None = None,
                  filters: "list[tuple] | None" = None) -> DataFrame:
-    """Score with pure DataFrame ops over ``postings_flat``.
+    """BM25 top-k on the Spark DataFrame locus (SearchEngine.topk_df).
 
-    The term filter is an ``isin`` over ≤|q| terms → pushed into the
-    parquet scan; scoring is whole-stage-codegen arithmetic; top-k is
-    TakeOrderedAndProject (no global sort materialized).
+    Query phase: the term filter is an ``isin`` over the ≤|q| live terms
+    → pushed into the schema-pinned ``postings_flat`` scan; idf comes
+    from the engine's plan as a literal map; scoring is
+    whole-stage-codegen arithmetic; top-k is TakeOrderedAndProject (no
+    global sort materialized).  Fetch phase: urls are point-read for the
+    k winners, returned as a local relation.
 
     ``mode="and"`` gives conjunctive semantics (ES ``bool.filter`` of term
     queries, J6 in SURVEY §2.3): only docs containing every term.

@@ -31,6 +31,30 @@ def test_queries_oracle_keys_consistent():
         assert name in o
 
 
+def test_bool_filters_oracle_is_deterministic():
+    """The ft_bm25_bool_filters oracle must give one answer run after
+    run.  On sf0.01 its rank-20 cut falls on a score tie that DuckDB's
+    parallel float sum breaks either way in the last bit; the oracle
+    orders on the rounded score, then doc_id.  Spark-free."""
+    import duckdb
+
+    import __spark_entry__ as m
+
+    docs = os.path.join(os.path.dirname(m.SF_DEFAULT), "sf0.01",
+                        "documents.parquet")
+    sql = m.oracle_sql()["ft_bm25_bool_filters"]
+    answers = set()
+    for _ in range(10):
+        con = duckdb.connect()
+        try:
+            con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+            answers.add(tuple(map(tuple, con.execute(sql).fetchall())))
+        finally:
+            con.close()
+    assert len(answers) == 1, len(answers)
+    assert len(next(iter(answers))) == m.BM25_K
+
+
 @pytest.mark.slow
 def test_entry_smoke(spark):
     import __spark_entry__ as m

@@ -30,28 +30,40 @@ def plans_index(spark, tiny_dir, tmp_path_factory):
     return idx
 
 
+def _query_phase(spark, index_dir, query, k):
+    """``bm25_topk_df``'s lazy query-phase frame: the fetch phase is
+    stubbed to hand back its ``top_k`` frame uncollected (the real one
+    collects it and returns a local relation)."""
+    from mongoesindexer_spark.operators import topk
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(topk.SearchEngine, "fetch_top",
+                   lambda self, scores, k: topk.top_k(scores, k))
+        return topk.bm25_topk_df(spark, index_dir, query, k)
+
+
 def test_term_filter_pushed_to_postings_scan(spark, plans_index):
     """The BM25 df path's term isin(...) must reach the parquet scan as
     PushedFilters — a full postings scan per query is wrong at any scale."""
-    from mongoesindexer_spark.operators.topk import bm25_topk_df
-
-    plan = _plan(bm25_topk_df(spark, plans_index, "the court", 5))
+    plan = _plan(_query_phase(spark, plans_index, "the court", 5))
     assert re.search(r"PushedFilters:.*term", plan), plan[:2000]
 
 
-def test_bm25_df_broadcasts_term_dict(spark, plans_index):
-    from mongoesindexer_spark.operators.topk import bm25_topk_df
-
-    plan = _plan(bm25_topk_df(spark, plans_index, "the court", 5))
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+def test_bm25_df_query_phase_scans_postings_flat_only(spark, plans_index):
+    """idf comes from the engine's plan and urls from a point read of the
+    k winners, so the query phase scans postings_flat and no other
+    table: no term_dict broadcast, no doc_stats join."""
+    plan = _plan(_query_phase(spark, plans_index, "the court", 5))
+    locations = re.findall(r"Location: \w+ \[([^\]]*)\]", plan)
+    assert locations and all("postings_flat" in loc for loc in locations), \
+        plan[:2000]
+    assert "term_dict" not in plan and "doc_stats" not in plan, plan[:2000]
 
 
 def test_bm25_df_topk_is_take_ordered(spark, plans_index):
     """orderBy(...).limit(k) must plan as TakeOrderedAndProject — a global
     sort materialization for a top-k would be wrong."""
-    from mongoesindexer_spark.operators.topk import bm25_topk_df
-
-    plan = _plan(bm25_topk_df(spark, plans_index, "the court", 5))
+    plan = _plan(_query_phase(spark, plans_index, "the court", 5))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -71,11 +83,9 @@ def test_whole_stage_codegen_covers_scoring(spark, plans_index):
     """The scoring arithmetic must live inside whole-stage-codegen spans
     (JVM-side, no Python in the hot path).  AQE's pre-execution formatted
     plan omits codegen ids, so inspect codegen mode explicitly."""
-    from mongoesindexer_spark.operators.topk import bm25_topk_df
-
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        df = bm25_topk_df(spark, plans_index, "the court", 5)
+        df = _query_phase(spark, plans_index, "the court", 5)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("codegen")
